@@ -14,7 +14,44 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Driver heap bounds in MiB: the derived default never exceeds the heap the
+# engine was tuned with (round 14) and never drops below what a session
+# needs to start.
+HEAP_CAP_MB = 16 * 1024
+HEAP_FLOOR_MB = 1024
+
+
+def default_cpus() -> int:
+    """Core count for ``local[N]``: ``SPARK_GRAFT_CPUS``, else the machine's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def available_memory_bytes() -> int:
+    """``MemAvailable`` from ``/proc/meminfo``; total physical memory where
+    that file (or the field) is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def driver_memory(available_bytes: int | None = None) -> str:
+    """Driver heap size as a JVM size string.
+
+    ``SPARK_DRIVER_MEMORY`` verbatim when set; else half of the available
+    memory, capped at ``HEAP_CAP_MB`` and floored at ``HEAP_FLOOR_MB``.
+    """
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    if available_bytes is None:
+        available_bytes = available_memory_bytes()
+    half_mb = available_bytes // 2 // (1024 * 1024)
+    return f"{min(HEAP_CAP_MB, max(HEAP_FLOOR_MB, half_mb))}m"
 
 
 def get_spark(
@@ -29,24 +66,29 @@ def get_spark(
     handling), broadcast threshold generous for star-schema dims, Arrow on
     for the pandas-UDF slow path.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cpus = default_cpus()
+    n_shuffle = shuffle_partitions or cpus
     # Fixed, fully pre-touched heap (round 14, guide §1 "measure first"):
-    # on this sandbox's kernel the JVM's default grow-and-shrink heap
-    # turns every allocation-heavy stage into a kernel-time storm — the
-    # heap commits/uncommits pages continuously and the fault path is
-    # ~50x slower than the memory itself (measured: u2@sf1 spent 2,147 s
-    # of SYSTEM time against 113 s of user time in one cold run; kernel
-    # stacks all in folio_zero_user/huge_pmd fault handling; memset
-    # bandwidth on committed pages is a healthy 10 GB/s single-thread).
-    # -Xms == -Xmx + AlwaysPreTouch commits and zeroes the whole heap
-    # ONCE at startup (~19 s for 16 g here, reported separately from
-    # every timed window), after which TLAB allocation never re-enters
-    # the kernel: the same cold run drops 214 s -> 4 s and steady-state
-    # sys time drops to ~2 s. Same discipline as production executors
-    # (fixed-size pre-touched heaps are the standard large-heap setup);
-    # SPARK_DRIVER_MEMORY stays the size knob — -Xms tracks it.
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    # on the kernel the engine was tuned on, the JVM's default
+    # grow-and-shrink heap turns every allocation-heavy stage into a
+    # kernel-time storm — the heap commits/uncommits pages continuously and
+    # the fault path is ~50x slower than the memory itself (measured: u2@sf1
+    # spent 2,147 s of SYSTEM time against 113 s of user time in one cold
+    # run; kernel stacks all in folio_zero_user/huge_pmd fault handling;
+    # memset bandwidth on committed pages is a healthy 10 GB/s
+    # single-thread). -Xms == -Xmx + AlwaysPreTouch commits and zeroes the
+    # whole heap ONCE at startup (~19 s for 16 g there, reported separately
+    # from every timed window), after which TLAB allocation never re-enters
+    # the kernel: the same cold run drops 214 s -> 4 s and steady-state sys
+    # time drops to ~2 s.
+    # Size: because the heap is committed up front, it must fit the box.
+    # The default is half of MemAvailable, capped at 16g (the round-14
+    # value, so any box with >= 32 GB available runs exactly as tuned) and
+    # floored at 1g; the other half holds the JVM's off-heap (metaspace,
+    # code cache, Netty/Arrow buffers), one Python worker per core and the
+    # Python driver. SPARK_DRIVER_MEMORY overrides the size verbatim; -Xms
+    # tracks it.
+    driver_mem = driver_memory()
     jvm_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch " + os.environ.get(
         "SPARK_GRAFT_JVM_OPTS", ""
     )
