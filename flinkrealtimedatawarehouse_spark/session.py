@@ -20,6 +20,9 @@ from pyspark.sql import SparkSession
 HEAP_CAP_MB = 16 * 1024
 HEAP_FLOOR_MB = 1024
 
+# The directory that holds this package, for the Python workers' path.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_cpus() -> int:
     """Core count for ``local[N]``: ``SPARK_GRAFT_CPUS``, else the machine's."""
@@ -105,6 +108,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
         .config("spark.driver.extraJavaOptions", jvm_opts.strip())
+        # Python workers fork from a daemon that stops every task from
+        # re-reading pyspark.zip's and the jars' zip directories (see
+        # workerdaemon); it still starts lazily, with the first Python task.
+        # The package's root goes on the workers' path so the daemon
+        # imports whatever the driver's working directory is.
+        .config("spark.python.daemon.module", "flinkrealtimedatawarehouse_spark.workerdaemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))

@@ -75,6 +75,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import write_json_atomic
+
 
 class TieredAppendStore:
     """Tiered layout manager for one append-only batch-partitioned
@@ -114,10 +116,7 @@ class TieredAppendStore:
     def _commit_state(self, st: dict) -> None:
         if self.fence_check is not None:
             self.fence_check()
-        tmp = self.marker_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self.marker_path)  # atomic on POSIX
+        write_json_atomic(self.marker_path, st)
 
     # Max roots for ONE explicit-path spark.read call: safely under
     # spark.sql.sources.parallelPartitionDiscovery.threshold (default
@@ -175,7 +174,9 @@ class TieredAppendStore:
         the same filesystem the marker lives on."""
         st = self._load()  # fresh: read handles must see new compactions
         ft = st["folded_through"]
-        sel = None if part_vals is None else list(part_vals)
+        # deduped in order: a repeated value would count its leaves twice
+        # towards _MAX_ROOTS_PER_READ and push the read onto the listed one
+        sel = None if part_vals is None else list(dict.fromkeys(part_vals))
         parts = []
         for ch in st["chunks"]:
             if as_of_batch is not None and ch["lo"] > as_of_batch:

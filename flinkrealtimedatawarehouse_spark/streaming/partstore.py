@@ -84,7 +84,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink, write_json_atomic
 
 
 def group_latest(key_cols: list[str]):
@@ -216,10 +216,7 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
             return json.load(f)
 
     def _write_manifest(self, v: int, parts: dict, schema_json: str) -> None:
-        tmp = self._manifest_path(v) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"parts": parts, "schema": schema_json}, f)
-        os.replace(tmp, self._manifest_path(v))  # atomic on POSIX
+        write_json_atomic(self._manifest_path(v), {"parts": parts, "schema": schema_json})
 
     def _state_schema(self, version: int | None = None) -> StructType:
         if version is None:

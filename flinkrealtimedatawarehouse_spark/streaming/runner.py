@@ -15,6 +15,7 @@ do better), and returns the accumulated sink contents as a batch DF.
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
 import shutil
@@ -25,6 +26,7 @@ from pyspark.sql import functions as F
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 _counter = itertools.count()
+_made: list[str] = []  # this process's scratch dirs, removed at exit
 
 # recentProgress of the last completed run_to_memory query — lets tests
 # assert on state-store metrics (e.g. numRowsTotal for eviction checks)
@@ -67,12 +69,25 @@ def use_rocksdb_state(spark: SparkSession, enable: bool = True) -> None:
 
 
 def scratch_dir(tag: str, fresh: bool = True) -> str:
-    """Per-run scratch path (checkpoints, staged inputs, sink outputs)."""
+    """Per-run scratch path (checkpoints, staged inputs, sink outputs).
+
+    The directory lives until this process exits, then it is removed."""
     path = os.path.join(SCRATCH, f"{tag}_{os.getpid()}_{next(_counter)}")
     if fresh and os.path.exists(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
+    _made.append(path)
     return path
+
+
+def _remove_scratch(pid: int = os.getpid()) -> None:
+    # a forked child inherits this handler but not the directories
+    if os.getpid() == pid:
+        for path in _made:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+atexit.register(_remove_scratch)
 
 
 def stage_stream_dir(

@@ -78,6 +78,7 @@ from flinkrealtimedatawarehouse_spark.datapipeline.textstats import (
 )
 from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
 from flinkrealtimedatawarehouse_spark.streaming.sinks import AdditiveGoldSink
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import write_json_atomic
 
 _STATS_KEYS = ["all_docs"]
 _STATS_MEASURES = {"n_docs": ("dl", "count"), "sum_dl": ("dl", "sum")}
@@ -144,8 +145,7 @@ class PostingsIndexSink:
                 )
         else:
             os.makedirs(out_dir, exist_ok=True)
-            with open(meta, "w") as f:
-                json.dump({"n_buckets": n_buckets}, f)
+            write_json_atomic(meta, {"n_buckets": n_buckets})
 
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
         if batch_id <= self.store.folded_through():

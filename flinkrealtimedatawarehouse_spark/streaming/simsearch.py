@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkrealtimedatawarehouse_spark.datapipeline.similarity import cosine_topk
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink, write_json_atomic
 
 
 class IncrementalTopKSink(VersionedSnapshotSink):
@@ -168,8 +168,7 @@ class IvfIndexSink:
                 )
         elif not read_only:
             os.makedirs(out_dir, exist_ok=True)
-            with open(meta, "w") as f:
-                json.dump(layout, f)
+            write_json_atomic(meta, layout)
 
     def _corpus_rows(self, batch: DataFrame) -> DataFrame:
         from flinkrealtimedatawarehouse_spark.datapipeline.similarity import quantized

@@ -37,6 +37,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` via a temp file and ``os.replace``,
+    so a reader never sees a torn file."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)  # atomic on POSIX
+
+
 class VersionedSnapshotSink:
     """Base: versioned snapshots under ``base_dir`` with a committed
     marker carrying (version, last_bid, lineage, meta).
@@ -145,19 +154,16 @@ class VersionedSnapshotSink:
     def _commit(self) -> None:
         self._check_fence()
         os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": self.version,
-                    "last_bid": self.last_bid,
-                    "min_version": self.min_version,
-                    "lineage": self.lineage,
-                    "meta": self.meta,
-                },
-                f,
-            )
-        os.replace(tmp, self._marker_path())  # atomic on POSIX
+        write_json_atomic(
+            self._marker_path(),
+            {
+                "version": self.version,
+                "last_bid": self.last_bid,
+                "min_version": self.min_version,
+                "lineage": self.lineage,
+                "meta": self.meta,
+            },
+        )
 
     def _write_snapshot(self, df: DataFrame, v: int) -> None:
         """Stage-then-rename snapshot write, fenced on both sides.

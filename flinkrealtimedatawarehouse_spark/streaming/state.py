@@ -8,7 +8,11 @@ state TTL becomes watermark-driven state eviction.
 (rt/app/dwd/UserJumpDetailApp.java:54-108) as an
 ``applyInPandasWithState`` operator with event-time timeouts (T7):
 
-- per key (mid), buffer incoming page events in group state;
+- per key (mid), buffer incoming page events in group state. The group
+  state is kept per hash bucket of the key (``BOUNCE_BUCKETS`` of them),
+  so one vectorised Python call decides a whole bucket of keys per batch
+  instead of one call per key; the bucket count is fixed because it is
+  the state key;
 - an entry event e (empty last_page_id) is *decidable* once the watermark
   passes ``e.ts + gap`` — at that point every event that could precede
   e's true successor has arrived (later-arriving older rows would be
@@ -16,9 +20,10 @@ state TTL becomes watermark-driven state eviction.
   bounce unless the next event exists, is a continuation (non-entry),
   and arrived within ``gap`` seconds;
 - decided entries are emitted and evicted; buffered events older than the
-  decision horizon are evicted with them, so state per key is bounded by
-  ``gap + delay`` seconds of events regardless of stream length — the
-  same bound Flink's CEP ``within(10s)`` + 1 s watermark gives.
+  key's decision horizon are evicted with them, so state per key is
+  bounded by ``gap + delay`` seconds of events regardless of stream
+  length — the same bound Flink's CEP ``within(10s)`` + 1 s watermark
+  gives — and a bucket's state row holds that tail for each of its keys.
 
 This emit-on-watermark discipline makes the operator deterministic on
 replay: output = pure function of (data, gap, delay), letting the DuckDB
@@ -30,6 +35,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -110,13 +116,23 @@ BOUNCE_TS_OUT_SCHEMA = T.StructType(
     list(BOUNCE_OUT_SCHEMA) + [T.StructField("entry_ts", T.TimestampType())]
 )
 
+# Bounce state is kept per hash bucket of the user, not per user: one
+# Python call per bucket and batch instead of one per user. The count is a
+# fixed constant, not a parameter, because it is part of the state layout:
+# the bucket is the state key, so a checkpoint written under one count
+# cannot resume under another.
+BOUNCE_BUCKETS = 32
+
 _BOUNCE_STATE_SCHEMA = T.StructType(
     [
+        T.StructField("user_id", T.ArrayType(T.LongType())),
         T.StructField("ts_us", T.ArrayType(T.LongType())),
         T.StructField("event_id", T.ArrayType(T.LongType())),
         T.StructField("is_entry", T.ArrayType(T.IntegerType())),
     ]
 )
+
+_NO_ENTRY = np.iinfo(np.int64).max
 
 
 def _bounce_fn(gap_s: int, emit_ts: bool = False):
@@ -130,71 +146,73 @@ def _bounce_fn(gap_s: int, emit_ts: bool = False):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
+        # one bucket's buffered events: parallel (user, ts_us, event_id,
+        # is_entry) arrays, several users interleaved
+        parts: list[list[np.ndarray]] = [[np.empty(0, np.int64)] for _ in range(4)]
         if state.exists:
-            ts_us, ev_id, is_entry = state.get
-            ts_us, ev_id, is_entry = list(ts_us), list(ev_id), list(is_entry)
-        else:
-            ts_us, ev_id, is_entry = [], [], []
-
+            for part, col in zip(parts, state.get):
+                part.append(np.asarray(col, dtype=np.int64))
         if not state.hasTimedOut:
             for pdf in pdfs:
+                parts[0].append(pdf["user_id"].to_numpy(np.int64))
                 # pandas datetime64[ns] -> int64 ns -> µs
-                ts_us.extend((pdf["ts"].astype("int64") // 1_000).tolist())
-                ev_id.extend(pdf["event_id"].astype("int64").tolist())
-                is_entry.extend(pdf["ie"].astype("int32").tolist())
-
+                parts[1].append(pdf["ts"].astype("int64").to_numpy() // 1_000)
+                parts[2].append(pdf["event_id"].to_numpy(np.int64))
+                parts[3].append(pdf["ie"].to_numpy(np.int64))
+        uid, ts_us, ev_id, is_entry = (np.concatenate(p) for p in parts)
         wm_us = state.getCurrentWatermarkMs() * 1_000
 
-        # canonical order: (ts, event_id) — the tiebreak the batch lead()
-        # uses (operators/bounce.py)
-        order = sorted(range(len(ts_us)), key=lambda i: (ts_us[i], ev_id[i]))
-        ts_us = [ts_us[i] for i in order]
-        ev_id = [ev_id[i] for i in order]
-        is_entry = [is_entry[i] for i in order]
+        # canonical order per user: (ts, event_id) — the tiebreak the batch
+        # lead() uses (operators/bounce.py)
+        order = np.lexsort((ev_id, ts_us, uid))
+        uid, ts_us, ev_id = uid[order], ts_us[order], ev_id[order]
+        is_entry = is_entry[order] != 0
 
-        out_uid, out_eid, out_b, out_ts = [], [], [], []
-        undecided_us = None
-        for i in range(len(ts_us)):
-            if not is_entry[i]:
-                continue
-            if ts_us[i] + gap_us < wm_us:
-                # decidable: true successor (if any) has arrived
-                if i + 1 < len(ts_us):
-                    gap_ok = ts_us[i + 1] - ts_us[i] < gap_us
-                    bounce = 0 if (gap_ok and not is_entry[i + 1]) else 1
-                else:
-                    bounce = 1  # timeout: no successor within gap (T7)
-                out_uid.append(user_id)
-                out_eid.append(ev_id[i])
-                out_b.append(bounce)
-                out_ts.append(ts_us[i])
-            elif undecided_us is None:
-                undecided_us = ts_us[i]
+        # strict successor = the next row of the same user
+        new_user = np.ones(len(uid), dtype=bool)
+        new_user[1:] = uid[1:] != uid[:-1]
+        has_next = np.append(~new_user[1:], False)
+        next_ts = np.append(ts_us[1:], 0)
+        next_entry = np.append(is_entry[1:], False)
+        survives = has_next & (next_ts - ts_us < gap_us) & ~next_entry
 
-        # evict everything that can no longer be the successor of an
-        # undecided entry (decided entries always precede undecided ones,
-        # so they are always evicted — no double emission on replay)
-        horizon = undecided_us if undecided_us is not None else wm_us
-        keep = [i for i in range(len(ts_us)) if ts_us[i] >= horizon]
-        if keep:
+        # decidable once the watermark passes ts + gap: the true successor
+        # (if any) has arrived; with none, the entry timed out (T7)
+        decided = is_entry & (ts_us + gap_us < wm_us)
+        undecided = is_entry & ~decided
+
+        # evict each user's rows that can no longer be the successor of an
+        # undecided entry: its horizon is its first undecided entry, else
+        # the watermark (decided entries always precede undecided ones, so
+        # they are always evicted — no double emission on replay)
+        first = np.minimum.reduceat(
+            np.where(undecided, ts_us, _NO_ENTRY), np.flatnonzero(new_user)
+        )
+        horizon = np.where(first == _NO_ENTRY, wm_us, first)
+        keep = ts_us >= horizon[np.cumsum(new_user) - 1]
+        if keep.any():
             state.update((
-                [ts_us[i] for i in keep],
-                [ev_id[i] for i in keep],
-                [is_entry[i] for i in keep],
+                uid[keep].tolist(),
+                ts_us[keep].tolist(),
+                ev_id[keep].tolist(),
+                is_entry[keep].astype(int).tolist(),
             ))
-            if undecided_us is not None:
+            if undecided.any():
                 # Spark fires when timeoutTimestamp < watermark (strict);
                 # tts = floor_ms(ts) + gap_ms makes "fires" ⇔ the µs
                 # decidability predicate ts_us + gap_us < wm_us (wm is
                 # ms-granular), so emission matches the oracle exactly
-                state.setTimeoutTimestamp(undecided_us // 1_000 + gap_s * 1_000)
+                state.setTimeoutTimestamp(int(ts_us[undecided].min()) // 1_000 + gap_s * 1_000)
         else:
             state.remove()
 
-        cols = {"user_id": out_uid, "event_id": out_eid, "is_bounce": out_b}
+        cols = {
+            "user_id": uid[decided],
+            "event_id": ev_id[decided],
+            "is_bounce": (~survives[decided]).astype(np.int32),
+        }
         if emit_ts:
-            cols["entry_ts"] = pd.to_datetime(pd.Series(out_ts, dtype="int64"), unit="us")
+            cols["entry_ts"] = pd.to_datetime(pd.Series(ts_us[decided], dtype="int64"), unit="us")
         yield pd.DataFrame(cols)
 
     return fn
@@ -213,23 +231,35 @@ def bounce_stream(
 
     ``entry_pred`` is the session-entry predicate (the reference tests
     ``last_page_id`` empty — UserJumpDetailApp.java:63-71). Emits
-    (user_id, event_id, is_bounce) for every *decided* entry event:
-    decidable once watermark > entry.ts + gap. With ``emit_ts`` the
-    entry's event time rides along as ``entry_ts`` so a downstream
-    event-time operator can consume the decision stream
+    (user_id, event_id, is_bounce) for every *decided* entry event, in
+    the first batch whose watermark passes entry.ts + gap. With
+    ``emit_ts`` the entry's event time rides along as ``entry_ts`` so a
+    downstream event-time operator can consume the decision stream
     (see ``bounce_stats_stream``).
+
+    State is grouped by ``pmod(xxhash64(user), BOUNCE_BUCKETS)``: one
+    state row per bucket holds the buffered events of all its users, and
+    one vectorised Python call per bucket decides them all. A bucket's
+    timer is the earliest deadline of its undecided entries, so every
+    entry still emits in the batch a per-user timer would have fired in.
+    The state stays bounded: per bucket, the events of its users from
+    ``gap + delay`` before the watermark on, at most ``BOUNCE_BUCKETS``
+    state rows in all. Checkpoints written by the earlier per-user layout
+    (key = user, no ``user_id`` array) do not resume under this one.
     """
     if entry_pred is None:
         entry_pred = F.col("event_type") == "view"
+    user_id = F.col(key).cast("long")
     prepared = events.withColumn("ie", entry_pred.cast("int")).select(
-        F.col(key).alias("user_id").cast("long"),
+        F.pmod(F.xxhash64(user_id), F.lit(BOUNCE_BUCKETS)).alias("bucket"),
+        user_id.alias("user_id"),
         F.col(ts_col).alias("ts"),
         F.col("event_id").cast("long"),
         "ie",
     )
     return (
         prepared.withWatermark("ts", delay)
-        .groupBy("user_id")
+        .groupBy("bucket")
         .applyInPandasWithState(
             _bounce_fn(gap_s, emit_ts=emit_ts),
             outputStructType=BOUNCE_TS_OUT_SCHEMA if emit_ts else BOUNCE_OUT_SCHEMA,

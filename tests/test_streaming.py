@@ -298,6 +298,80 @@ def test_stream_bounce_exactly_gap_boundary(spark):
     assert got == {1: 1, 3: 0}
 
 
+def _random_bounce_events(seed: int, n_users: int = 50):
+    """Events for ``n_users`` users over ten minutes on whole
+    milliseconds, with equal-ts ties, successors at exactly the 10 s gap
+    and successors 1 ms inside it. Returns (rows, {event_id: ts in ms})."""
+    import random
+
+    rng = random.Random(seed)
+    t0_ms = int(ts("2024-01-01 00:00:00").timestamp()) * 1000
+    rows, ts_ms = [], {}
+    for u in range(n_users):
+        t = t0_ms + rng.randrange(0, 540_000)
+        for _ in range(rng.randrange(2, 12)):
+            kind = rng.random()
+            if kind < 0.15:
+                pass  # tie: same ts as the previous event
+            elif kind < 0.3:
+                t += 10_000  # successor at exactly the gap
+            elif kind < 0.4:
+                t += 9_999  # successor 1 ms inside the gap
+            else:
+                t += rng.randrange(0, 25_000)
+            eid = len(rows) + 1
+            ts_ms[eid] = t
+            # naive local time, as Spark reads it back to the same instant
+            at = datetime.fromtimestamp(t // 1000).replace(microsecond=t % 1000 * 1000)
+            rows.append((u, eid, at, rng.choice(["view", "view", "click", "cart"]), 0.0, None))
+    return rows, ts_ms
+
+
+def test_stream_bounce_random_matches_batch_lead_batch_by_batch(spark):
+    """The bucketed bounce operator against the batch lead() rule
+    (operators/bounce.mark_bounces, event_id tiebreak) on random events
+    over 6 micro-batches: every entry is decided exactly once, with the
+    batch rule's verdict, in the FIRST micro-batch whose watermark passes
+    entry.ts + gap; and the state holds at most one row per bucket."""
+    from flinkrealtimedatawarehouse_spark.operators import bounce
+
+    rows, ts_ms = _random_bounce_events(7)
+    sdf = _stream_events(spark, rows, 6, "brand", sentinel_pad="60 seconds")
+    emitted = []
+
+    def collect(df, bid):
+        emitted.extend((bid, r.user_id, r.event_id, r.is_bounce) for r in df.collect())
+
+    runner.run_foreach_batch(state.bounce_stream(sdf, gap_s=10, delay="1 second"), collect, "brand")
+    progress = runner.LAST_PROGRESS
+    got = [(bid, u, e, b) for bid, u, e, b in emitted if u >= 0]
+    assert len({bid for bid, *_ in got}) >= 4  # decisions spread over batches
+    assert max(
+        op["numRowsTotal"] for p in progress for op in p["stateOperators"]
+    ) <= state.BOUNCE_BUCKETS
+
+    src = spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, event_type string, value double, props string"
+    )
+    expect = {
+        r.event_id: (r.user_id, r.is_bounce)
+        for r in bounce.mark_bounces(
+            src, "user_id", "ts", F.col("event_type") == "view", 10, tiebreak="event_id"
+        ).collect()
+    }
+    assert len(got) == len(expect)
+    assert {e: (u, b) for _, u, e, b in got} == expect
+
+    def wm_ms(p):
+        at = datetime.fromisoformat(p["eventTime"]["watermark"].replace("Z", "+00:00"))
+        return int(at.replace(microsecond=0).timestamp()) * 1000 + at.microsecond // 1000
+
+    watermarks = sorted((p["batchId"], wm_ms(p)) for p in progress)
+    for bid, _, e, _ in got:
+        first = next(b for b, wm in watermarks if wm > ts_ms[e] + 10_000)
+        assert bid == first, (e, bid, first)
+
+
 def test_stream_bounce_then_window_chain(spark):
     """T7→A1 multi-stateful chain (VisitorStatsApp.java:126): the CEP
     bounce decision stream feeds a watermarked tumble in ONE checkpointed
@@ -2129,6 +2203,70 @@ def test_keystate_sink_simhash_and_embedding_twins(spark, tmp_path):
     assert late.version == v
     got_l = {r["doc_id"]: r["is_near_dup"] for r in late.flags(spark).collect()}
     assert got_l == {50: 0, 7: 1}
+
+
+def test_scratch_dirs_removed_when_their_process_exits():
+    """No JVM: a process's scratch dirs go when it exits, a forked child
+    leaves its parent's alone, and a dir already gone is no error."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import os\n"
+        "from flinkrealtimedatawarehouse_spark.streaming import runner\n"
+        "a, b, c = (runner.scratch_dir('exitprobe') for _ in range(3))\n"
+        "os.rmdir(c)\n"
+        "if os.fork() == 0:\n"
+        "    raise SystemExit(0)\n"  # the child runs its atexit handlers
+        "os.wait()\n"
+        "assert os.path.isdir(a) and os.path.isdir(b)\n"
+        "print(a, b, c)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    paths = out.stdout.split()
+    assert len(paths) == 3 and all("exitprobe_" in p for p in paths)
+    assert not any(os.path.exists(p) for p in paths)
+
+
+def test_write_json_atomic_replaces_whole_file(tmp_path):
+    import json
+
+    from flinkrealtimedatawarehouse_spark.streaming.snapshots import write_json_atomic
+
+    path = tmp_path / "layout.json"
+    write_json_atomic(str(path), {"n_buckets": 64})
+    write_json_atomic(str(path), {"n_buckets": 8})
+    assert json.loads(path.read_text()) == {"n_buckets": 8}
+    assert [p.name for p in tmp_path.iterdir()] == ["layout.json"]  # no temp file left
+
+
+def test_tiered_read_repeated_part_vals_reads_each_row_once(spark, tmp_path):
+    """A part value named twice selects its leaves once, in a chunk and
+    in the live tail alike. Spark itself drops a repeated root path, so
+    the rows were right before too; but every repeat counted towards the
+    24-root cap of one explicit-path reader, and past it the read fell
+    back to listing and scanning every leaf."""
+    from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
+
+    tail = tmp_path / "tail"
+    store = TieredAppendStore(str(tail), "bucket", compact_every=1, keep_recent=1)
+    for b in range(3):
+        rows = [(b * 10 + i, i % 2) for i in range(4)]
+        spark.createDataFrame(rows, "id long, bucket int").write.partitionBy("bucket").parquet(
+            str(tail / f"batch={b}")
+        )
+    assert store.maybe_compact(spark, 2)["folded_through"] >= 0  # a chunk and a tail
+    once = sorted(r.id for r in store.read(spark, part_vals=[1]).collect())
+    assert once == [1, 3, 11, 13, 21, 23]
+    assert sorted(r.id for r in store.read(spark, part_vals=[1, 1]).collect()) == once
+    assert sorted(r.id for r in store.read(spark, 1, part_vals=[1, 0, 1]).collect()) == [0, 1, 2, 3, 10, 11, 12, 13]
+    files = store.read(spark, part_vals=[1] * 25).inputFiles()
+    assert files and all("/bucket=1/" in f for f in files)  # still the pruned read
 
 
 @pytest.mark.slow
