@@ -38,24 +38,23 @@ Design: a two-level LSM tree on raw parquet.
 Crash contract (the property the round-10 design demanded): compaction
 must stay idempotent against the sinks' replay dedup.
 
-- The marker (``<tail>_compaction.json``) is the single source of truth,
-  atomically replaced (tmp + rename) AFTER chunk data lands. A crash
-  before the marker commit leaves an unreferenced chunk directory that
-  the next fold overwrites (``next_id`` never advanced); a crash after
-  the commit but before cleanup leaves folded tail/merged chunk dirs
-  that the read path already ignores (tail reads filter
+- The owning sink's marker (``_committed.json``, under ``meta
+  ["compaction"]``) is the single source of truth: the same atomic
+  replace that commits the sink's batches, written AFTER chunk data
+  lands. A crash before the commit leaves an unreferenced chunk
+  directory that the next fold overwrites (``next_id`` never advanced);
+  a crash after the commit but before cleanup leaves folded tail/merged
+  chunk dirs that the read path already ignores (tail reads filter
   ``batch > folded_through``; chunk reads list only marker-referenced
   names) and the next ``maybe_compact`` sweeps.
-- ``folded_through`` gates the WRITER: a foreachBatch redelivery of a
-  batch whose rows already live in a chunk must NOT recreate its tail
-  directory (the rows would count twice). The sinks consult
-  ``folded_through()`` before writing; their stats folds were committed
-  before the batch became foldable, so the whole redelivery is a no-op.
-- Only batches at or below the sink's committed stats watermark fold, so
-  a half-written batch (crash between data write and stats marker) is
-  never captured mid-flight.
-- All mutations run under the owning sink's writer fence (the
-  ``fence_check`` callback): a fenced straggler raises before touching
+- ``folded_through`` never passes the sink's replay watermark: only
+  batches at or below the committed ``last_bid`` fold, so a half-written
+  batch (crash between data write and marker) is never captured
+  mid-flight, and a redelivered folded batch is a replay the sink's
+  ``seen`` guard drops before it could recreate its tail directory (its
+  rows would count twice).
+- All mutations run under the owning sink's writer fence (its
+  ``_commit`` re-checks it): a fenced straggler raises before touching
   the marker or deleting a byte — same single-writer contract as
   ``snapshots.VersionedSnapshotSink``.
 
@@ -68,55 +67,51 @@ format with a transaction log.
 
 from __future__ import annotations
 
-import json
+import copy
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import write_json_atomic
-
 
 class TieredAppendStore:
     """Tiered layout manager for one append-only batch-partitioned
     directory (``tail_dir`` = the sink's existing ``postings``/``corpus``
-    dir; chunks live beside it in ``<tail_dir>_chunks``).
+    dir; chunks live beside it in ``<tail_dir>_chunks``). Its state lives
+    in ``owner``'s marker (a ``snapshots.VersionedSnapshotSink``): a
+    writer's in-memory copy, re-read from disk on every call by a read
+    handle so it sees folds committed since it was opened.
 
-    With no marker present, ``read`` degrades to a plain read of the
-    tail directory — bit-identical plans to the pre-compaction code, so
-    manually compacted layouts (tests swap directories by hand) keep
-    working unchanged.
+    With no compaction state in the marker, ``read`` degrades to a plain
+    read of the tail directory — bit-identical plans to the
+    pre-compaction code, so manually compacted layouts (tests swap
+    directories by hand) keep working unchanged.
     """
 
-    def __init__(self, tail_dir: str, part_col: str,
+    _EMPTY = {"folded_through": -1, "chunks": [], "next_id": 0}
+
+    def __init__(self, tail_dir: str, part_col: str, owner,
                  sort_cols: list[str] | None = None,
                  compact_every: int = 16, keep_recent: int = 4,
-                 max_chunks: int = 8, fence_check=None):
+                 max_chunks: int = 8):
         if compact_every < 1 or keep_recent < 1 or max_chunks < 2:
             raise ValueError("compact_every/keep_recent >= 1, max_chunks >= 2")
         self.tail_dir = tail_dir
         self.chunk_root = tail_dir + "_chunks"
-        self.marker_path = tail_dir + "_compaction.json"
+        self.owner = owner
         self.part_col = part_col
         self.sort_cols = list(sort_cols or [])
         self.compact_every = compact_every
         self.keep_recent = keep_recent
         self.max_chunks = max_chunks
-        self.fence_check = fence_check
 
     # --- state -------------------------------------------------------------
 
     def _load(self) -> dict:
-        if os.path.exists(self.marker_path):
-            with open(self.marker_path) as f:
-                return json.load(f)
-        return {"folded_through": -1, "chunks": [], "next_id": 0}
-
-    def _commit_state(self, st: dict) -> None:
-        if self.fence_check is not None:
-            self.fence_check()
-        write_json_atomic(self.marker_path, st)
+        if self.owner.read_only:
+            self.owner.refresh()
+        return copy.deepcopy(self.owner.meta.get("compaction", self._EMPTY))
 
     # Max roots for ONE explicit-path spark.read call: safely under
     # spark.sql.sources.parallelPartitionDiscovery.threshold (default
@@ -251,7 +246,7 @@ class TieredAppendStore:
         sweep crash leftovers, minor-fold the tail when it exceeds
         ``compact_every + keep_recent`` directories, size-tiered major
         merge when chunks exceed ``max_chunks``. Only batches
-        ``<= committed_bid`` (the sink's stats watermark) fold. Returns
+        ``<= committed_bid`` (the sink's replay watermark) fold. Returns
         the resulting marker state."""
         st = self._load()
         self._sweep(st)
@@ -287,7 +282,8 @@ class TieredAppendStore:
         )
         st["folded_through"] = max(fold_ids)
         st["next_id"] += 1
-        self._commit_state(st)  # point of no return
+        self.owner.meta["compaction"] = st
+        self.owner._commit()  # re-checks the fence; point of no return
         for b in fold_ids:  # crash here -> orphans; read ignores, sweep collects
             shutil.rmtree(
                 os.path.join(self.tail_dir, f"batch={b}"), ignore_errors=True
@@ -313,7 +309,8 @@ class TieredAppendStore:
              "n_batches": sum(m["n_batches"] for m in merge)}
         ]
         st["next_id"] += 1
-        self._commit_state(st)
+        self.owner.meta["compaction"] = st
+        self.owner._commit()
         for m in merge:
             shutil.rmtree(os.path.join(self.chunk_root, m["name"]),
                           ignore_errors=True)
@@ -333,8 +330,7 @@ class TieredAppendStore:
                              if n not in live]
         if not doomed_tail and not doomed_chunks:
             return
-        if self.fence_check is not None:
-            self.fence_check()
+        self.owner._check_fence()
         for b in doomed_tail:
             shutil.rmtree(os.path.join(self.tail_dir, f"batch={b}"),
                           ignore_errors=True)

@@ -182,19 +182,12 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
         self.merge_fn = merge_fn
         self.n_partitions = n_partitions
         self.max_runs = max_runs
-        if self.version >= 0:  # restart: layout parameters must match
-            if self.meta.get("n_partitions") != n_partitions:
-                raise ValueError(
-                    f"store at {base_dir!r} was written with "
-                    f"n_partitions={self.meta.get('n_partitions')}, not "
-                    f"{n_partitions}: the key->partition routing would "
-                    "scramble — re-create the store to re-partition"
-                )
-            if self.meta.get("key_cols") != self.key_cols:
-                raise ValueError(
-                    f"store at {base_dir!r} is keyed on "
-                    f"{self.meta.get('key_cols')}, not {self.key_cols}"
-                )
+        self.pin_layout(
+            {"n_partitions": n_partitions, "key_cols": self.key_cols},
+            "a store keyed on other columns or hashed to another partition "
+            "count would scramble the key->partition routing — re-create "
+            "the store to re-partition",
+        )
 
     # --- layout --------------------------------------------------------------
 
@@ -261,8 +254,6 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
             return
         self._check_fence()
         self.meta["schema"] = empty.schema.json()
-        self.meta["n_partitions"] = self.n_partitions
-        self.meta["key_cols"] = self.key_cols
         self.version = 0
         self._write_manifest(0, {}, self.meta["schema"])
         self._commit()
@@ -535,10 +526,10 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
         so latest-wins ordering is preserved.
 
         The SOURCE is never mutated (a read_only handle migrates fine);
-        a crash mid-migration leaves a marker-less target dir that the
-        re-run overwrites. Cost: one full read + write of |state| —
-        amortized over the store's remaining life, the same class as an
-        index rebuild."""
+        a crash mid-migration leaves a target whose marker holds only the
+        layout (no version), which the re-run overwrites. Cost: one full
+        read + write of |state| — amortized over the store's remaining
+        life, the same class as an index rebuild."""
         if type(self).pid_expr is not PartitionedSnapshotStore.pid_expr:
             # the migrated rows are routed with the BASE pid_expr below
             # and the target is a base-class store; a subclass with its
@@ -593,12 +584,8 @@ class PartitionedSnapshotStore(VersionedSnapshotSink):
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         schema_json = self._load_manifest(v)["schema"]
-        new.meta = dict(self.meta)
-        new.meta.update(
-            n_partitions=n_partitions, key_cols=self.key_cols,
-            schema=schema_json,
-            repartitioned_from=self.base_dir, repartitioned_at=v,
-        )
+        new.meta = {**self.meta, **new.meta, "schema": schema_json,
+                    "repartitioned_from": self.base_dir, "repartitioned_at": v}
         new.version = v
         new.min_version = v  # pre-migration history stays with the source
         new.last_bid = self.last_bid

@@ -26,15 +26,17 @@ Incremental design — what makes this cheap per batch:
   so a per-term window count over the pruned scan IS the corpus df —
   the same identity ``bm25_search`` uses. Cost is O(matching rows),
   paid only at query time, only for query terms.
-- **Corpus scalars fold additively.** (n_docs, sum_dl) go through the
-  K4 ``AdditiveGoldSink`` (replay-safe batch-id marker, versioned
-  snapshots); avgdl = sum_dl / n_docs. Both are integer-valued sums, so
-  the double accumulation is exact below 2^53 and the streamed avgdl is
-  bit-identical to the batch ``avg(size(toks))`` regardless of how the
-  stream was split.
+- **Corpus scalars are two integers in the commit record.** Each
+  batch's (n_docs, sum_dl) comes from one aggregate over its persisted
+  tokens and is added to the previous totals in the index's marker
+  (``_committed.json`` at the index root, a
+  ``snapshots.VersionedSnapshotSink`` with its replay guard and writer
+  fence), one entry per version for as-of search; avgdl = sum_dl /
+  n_docs. Integer sums, so the streamed avgdl is bit-identical to the
+  batch ``avg(size(toks))`` regardless of how the stream was split.
 
-Scale: per batch the work is tokenize + one partial agg + one
-partitioned parquet write of |batch| rows — no read-modify-write of the
+Scale: per batch the work is tokenize + one partitioned parquet write
+of |batch| rows + one two-number aggregate — no read-modify-write of the
 existing index, no vocabulary-sized merge. The index directory would
 grow one partition per batch forever; since round 11 the sink runs the
 ``compaction.TieredAppendStore`` policy BY DEFAULT (an LSM tree on raw
@@ -52,17 +54,23 @@ test_streamed_postings_compaction_preserves_search); automatic
 compaction is pinned across >= 64 batches in
 tests/test_streaming.py::test_auto_compaction_bounds_postings_layout.
 
+One commit record: the marker holds the bucket modulus, the compaction
+state and the totals, so the index directory is the marker, the writer
+claim, ``postings/`` and ``postings_chunks/``. Index directories written
+before the marker carried all three (a ``layout.json``, a
+``postings_compaction.json`` and ``stats/`` parquet snapshots) do not
+resume; rebuild them.
+
 Crash contract (same as the other sinks): postings land BEFORE the
-stats marker, so a crash between the two replays the batch on restart —
-the postings overwrite is a no-op and the stats fold applies once. A
-search against an index whose stream died mid-batch and never restarted
-may see that batch's postings without its stats; restart-to-recover
-completes the fold (pinned in tests/test_crash_recovery.py).
+marker commit, so a crash between the two replays the batch on restart —
+the postings overwrite is a no-op and the totals apply once. A search
+reads one commit: it bounds its postings read at the marker's
+``last_bid``, so a batch whose postings landed but whose commit did not
+stays invisible (pinned in tests/test_crash_recovery.py).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -77,39 +85,76 @@ from flinkrealtimedatawarehouse_spark.datapipeline.textstats import (
     query_terms,
 )
 from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
-from flinkrealtimedatawarehouse_spark.streaming.sinks import AdditiveGoldSink
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import write_json_atomic
-
-_STATS_KEYS = ["all_docs"]
-_STATS_MEASURES = {"n_docs": ("dl", "count"), "sum_dl": ("dl", "sum")}
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
 
 
-def _stats_sink(out_dir: str, read_only: bool = False) -> AdditiveGoldSink:
-    return AdditiveGoldSink(
-        os.path.join(out_dir, "stats"), keys=_STATS_KEYS,
-        measures=_STATS_MEASURES, read_only=read_only,
-    )
+class PostingsStats(VersionedSnapshotSink):
+    """The postings index's commit record: the marker at the index root.
+    One version per applied batch (ids sequential from 0, so version ==
+    batch id); ``meta["stats"]`` holds the corpus totals ``[n_docs,
+    sum_dl]`` of every retained version, oldest first. No snapshot
+    directories: the totals are the whole state."""
+
+    def totals(self, version: int) -> tuple[int, int]:
+        self._check_retained(version)
+        n_docs, sum_dl = self.meta["stats"][version - self.min_version]
+        return n_docs, sum_dl
+
+    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
+        """One-row ``(n_docs, sum_dl)`` frame as of ``version``."""
+        return spark.createDataFrame(
+            [tuple(map(float, self.totals(version)))],
+            "n_docs double, sum_dl double",
+        )
+
+    def commit_batch(self, batch_id: int, n_docs: int, sum_dl: int) -> None:
+        hist = self.meta.setdefault("stats", [])
+        prev = hist[-1] if hist else [0, 0]
+        hist.append([prev[0] + n_docs, prev[1] + sum_dl])
+        self.version += 1
+        self.last_bid = batch_id
+        self._commit()
+
+    def vacuum(self, keep_last: int) -> list[int]:
+        """Drop the totals of all but the newest ``keep_last`` versions
+        (as-of search before them then raises); returns the dropped
+        versions."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1")
+        if self.read_only:
+            raise RuntimeError("read-only snapshot handle cannot vacuum")
+        new_min = max(self.min_version, self.version - keep_last + 1)
+        removed = list(range(self.min_version, new_min))
+        if removed:
+            del self.meta["stats"][:len(removed)]
+            self.min_version = new_min
+            self._commit()
+        return removed
 
 
-def _postings_store(out_dir: str, fence_check=None, **policy) -> TieredAppendStore:
+def _stats_sink(out_dir: str, read_only: bool = False) -> PostingsStats:
+    return PostingsStats(out_dir, read_only=read_only)
+
+
+def _postings_store(out_dir: str, owner: PostingsStats, **policy) -> TieredAppendStore:
     # sort chunks by term first (every query filters terms: dictionary +
     # min/max prune within the bucket), batch second (as-of row filter)
     return TieredAppendStore(
-        os.path.join(out_dir, "postings"), "bucket",
-        sort_cols=["term", "batch"], fence_check=fence_check, **policy,
+        os.path.join(out_dir, "postings"), "bucket", owner,
+        sort_cols=["term", "batch"], **policy,
     )
 
 
 class PostingsIndexSink:
     """foreachBatch writer that maintains the streamed inverted index:
     per batch, (1) tokenize + tf-aggregate, (2) overwrite the batch's own
-    bucket-partitioned postings directory, (3) fold (n_docs, sum_dl)
-    through the replay-safe AdditiveGoldSink, (4) run the tiered
-    compaction policy (``compaction`` module; pass
-    ``compact_every=None`` to disable). Postings-before-marker ordering
-    makes the pair recoverable (module docstring); compaction folds only
-    stats-committed batches and is gated against replays by
-    ``folded_through``."""
+    bucket-partitioned postings directory, (3) aggregate the batch's
+    (n_docs, sum_dl) and commit the new totals with the batch id in the
+    index marker (``stats``), (4) run the tiered compaction policy
+    (``compaction`` module; pass ``compact_every=None`` to disable).
+    Postings-before-marker ordering makes the pair recoverable (module
+    docstring); compaction folds only committed batches, and the marker's
+    replay guard drops a redelivered batch before it touches a file."""
 
     def __init__(self, out_dir: str, id_col: str, text_col: str,
                  n_buckets: int = POSTINGS_BUCKETS,
@@ -119,58 +164,38 @@ class PostingsIndexSink:
         self.id_col, self.text_col = id_col, text_col
         self.n_buckets = n_buckets
         self.stats = _stats_sink(out_dir)
+        # the bucket modulus is part of the on-disk index (a mismatched
+        # search-time modulus silently prunes REAL postings — same rule
+        # as build_postings' stats row)
+        self.stats.pin_layout(
+            {"n_buckets": n_buckets},
+            "postings bucketed under two moduli would be silently pruned "
+            "away at search time",
+        )
         self.compact_every = compact_every
         self.store = _postings_store(
-            out_dir, fence_check=self.stats._check_fence,
+            out_dir, self.stats,
             compact_every=compact_every or 16, keep_recent=keep_recent,
             max_chunks=max_chunks,
         )
-        # layout marker: the bucket modulus is part of the on-disk index
-        # (a mismatched search-time modulus silently prunes REAL postings
-        # — same rule as build_postings' stats row). Write-once, before
-        # any batch, so even a crash after batch 0 leaves it readable; a
-        # restarted writer passing a DIFFERENT modulus must refuse rather
-        # than mix moduli in one directory (the silent corruption the
-        # marker exists to prevent).
-        meta = os.path.join(out_dir, "layout.json")
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f)["n_buckets"]
-            if stored != n_buckets:
-                raise ValueError(
-                    f"index at {out_dir} was built with n_buckets={stored}; "
-                    f"refusing to append with n_buckets={n_buckets} (postings "
-                    "bucketed under two moduli would be silently pruned away "
-                    "at search time)"
-                )
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-            write_json_atomic(meta, {"n_buckets": n_buckets})
 
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.store.folded_through():
-            # redelivered batch whose rows already live in a compacted
-            # chunk: recreating its tail directory would double-count the
-            # rows (chunk + tail), and its stats fold was committed before
-            # the batch became foldable — the whole redelivery is a no-op
+        if self.stats.seen(batch_id):
+            # redelivered batch: its postings landed before its commit,
+            # and may since live in a compacted chunk, where a recreated
+            # tail directory would count them twice — a no-op
             return
         toks = batch.select(
             F.col(self.id_col), spark_tokens(F.col(self.text_col)).alias("toks")
         ).filter(F.size("toks") > 0)
-        # two actions read this lineage (postings write + stats fold);
+        # two actions read this lineage (postings write + totals);
         # without the batch-scoped persist every document would be
-        # regex-tokenized twice per micro-batch.
-        # NEGATIVE RESULT (round 15, kept per the repo's discipline): a
-        # one-pass variant — stats scalars via df.observe on the postings
-        # write, persist dropped, the fold fed a pre-aggregated local
-        # row — was built, tested, and REVERTED: phase-timed over the
-        # same 48-batch drive the fold got SLOWER (0.51 vs 0.32 s/batch;
-        # total 60.4 vs 52.4 s). The old fold's marginal work (agg over
-        # the still-cached toks) is cheaper than executing a fresh
-        # LocalRelation plan per batch, and the action floor dominates
-        # either way. Behavior is pinned by
-        # test_postings_observed_stats_match_second_pass regardless of
-        # implementation.
+        # regex-tokenized twice per micro-batch. (Round 15 measured a
+        # one-pass variant, the totals observed on the postings write,
+        # slower: its parquet stats fold then ran a LocalRelation plan
+        # per batch. The totals now commit as two integers in the marker,
+        # with no parquet write and no such plan; the aggregate over the
+        # cached toks is the whole cost.)
         toks.persist()
         try:
             tf = (
@@ -189,14 +214,14 @@ class PostingsIndexSink:
             tf.write.mode("overwrite").partitionBy("bucket").parquet(
                 os.path.join(self.out_dir, "postings", f"batch={batch_id}")
             )
-            self.stats.write_batch(
-                toks.select(F.lit(0).alias("all_docs"), F.size("toks").alias("dl")),
-                batch_id,
-            )
+            n_docs, sum_dl = toks.agg(
+                F.count(F.lit(1)), F.sum(F.size("toks"))
+            ).first()
         finally:
             toks.unpersist()
+        self.stats.commit_batch(batch_id, n_docs, sum_dl or 0)
         if self.compact_every is not None:
-            # after the stats marker: only committed batches ever fold
+            # after the commit: only committed batches ever fold
             self.store.maybe_compact(batch.sparkSession, self.stats.last_bid)
 
 
@@ -242,57 +267,57 @@ def streamed_postings_search(spark: SparkSession, out_dir: str, id_col: str,
     """Search the stream-maintained index: bucket-pruned, term-filtered
     postings scan (reads 1/n_buckets of the index per term — the batch
     partitions under each bucket are pruned directories too), per-term
-    window count = corpus df, corpus scalars from the additive stats
-    snapshot, then the shared ``_bm25_rank`` tail — one definition of
-    the formula across bm25_search / postings_search / this.
+    window count = corpus df, corpus scalars from the index marker, then
+    the shared ``_bm25_rank`` tail — one definition of the formula across
+    bm25_search / postings_search / this.
 
     ``as_of_batch`` = point-in-time search: answer as the index stood
-    after that stream batch committed — stats from the matching snapshot
+    after that stream batch committed — totals of the matching marker
     version (one commit per applied batch, ids sequential from 0, so
-    version == batch id) and postings pruned to ``batch <= as_of_batch``
-    directories. Versions the stats sink has vacuumed raise, per
-    ``read_version``'s own contract."""
+    version == batch id) and postings pruned to ``batch <= as_of_batch``.
+    Versions the marker has vacuumed raise, per ``read_version``'s own
+    contract."""
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no tokens")
-    rows, stats = _streamed_index_rows(spark, out_dir, terms, as_of_batch)
-    term_w = Window.partitionBy("term")
-    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop(
-        "batch", "bucket"
-    )
+    postings, stats = _streamed_index_rows(spark, out_dir, terms, as_of_batch)
     return _bm25_rank(postings, stats, id_col, k1, b, k)
 
 
 def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
                          as_of_batch: int | None):
     """Shared read path for single- and multi-query streamed search:
-    (pruned+filtered postings rows, stats frame). df is NOT stored in the
-    streamed layout — callers window-count it over these rows. Reads go
-    through the tiered store: chunk + tail union once auto-compaction has
-    run, a plain directory read (identical to the pre-compaction plan)
-    before it."""
-    with open(os.path.join(out_dir, "layout.json")) as f:
-        n_buckets = json.load(f)["n_buckets"]
-    sink = _stats_sink(out_dir, read_only=True)
+    (pruned+filtered postings rows with df, 1-row (n_docs, avgdl) frame).
+    df is NOT stored in the streamed layout: it is window-counted over
+    these rows. The totals, the bucket modulus and the postings horizon
+    come from one marker load, so the search reads one commit: postings
+    of a batch whose commit has not landed are outside the horizon.
+    Reads go through the tiered store: chunk + tail union once
+    auto-compaction has run, a plain directory read (identical to the
+    pre-compaction plan) before it."""
+    marker = _stats_sink(out_dir, read_only=True)
+    if marker.version < 0:
+        raise ValueError(f"postings index at {out_dir} has no committed batches")
     if as_of_batch is None:
-        cur = sink.current(spark)
-        if cur is None:
-            raise ValueError(f"postings index at {out_dir} has no committed batches")
+        version, horizon = marker.version, marker.last_bid
     else:
-        cur = sink.read_version(spark, as_of_batch)
-    stats = cur.select(
-        F.col("n_docs"), (F.col("sum_dl") / F.col("n_docs")).alias("avgdl")
+        version = horizon = as_of_batch
+    n_docs, sum_dl = marker.totals(version)
+    stats = spark.createDataFrame(
+        [(float(n_docs), sum_dl / n_docs if n_docs else None)],
+        "n_docs double, avgdl double",
     )
-    buckets = sorted(set(_term_buckets(spark, terms, n_buckets).values()))
+    buckets = sorted(set(_term_buckets(spark, terms, marker.meta["n_buckets"]).values()))
     # part_vals: the scan is constructed from the term buckets' own
     # directories (round 15, guide §6) instead of listing the whole
     # batch= / bucket= tree and pruning after — identical rows, the
     # per-read listing premium removed
     rows = (
-        _postings_store(out_dir).read(spark, as_of_batch, part_vals=buckets)
+        _postings_store(out_dir, marker).read(spark, horizon, part_vals=buckets)
         .filter(F.col("term").isin(terms))
     )
-    return rows, stats
+    df = F.count(F.lit(1)).over(Window.partitionBy("term"))
+    return rows.withColumn("df", df).drop("batch", "bucket"), stats
 
 
 def streamed_postings_search_many(spark: SparkSession, out_dir: str,
@@ -313,9 +338,5 @@ def streamed_postings_search_many(spark: SparkSession, out_dir: str,
     qrows = _query_term_rows(queries)
     all_terms = sorted({t for _, t in qrows})
     qdf = spark.createDataFrame(qrows, "query_id long, term string")
-    rows, stats = _streamed_index_rows(spark, out_dir, all_terms, as_of_batch)
-    term_w = Window.partitionBy("term")
-    postings = rows.withColumn("df", F.count(F.lit(1)).over(term_w)).drop(
-        "batch", "bucket"
-    )
+    postings, stats = _streamed_index_rows(spark, out_dir, all_terms, as_of_batch)
     return _bm25_rank_many(postings, qdf, stats, id_col, k1, b, k)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flinkrealtimedatawarehouse_spark.datapipeline.similarity import cosine_topk
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink, write_json_atomic
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
 
 
 class IncrementalTopKSink(VersionedSnapshotSink):
@@ -91,10 +91,15 @@ class IncrementalTopKSink(VersionedSnapshotSink):
 #   overwriting only its own directory. Search prunes by cell exactly as
 #   against the batch-built layout (the extra batch partition column
 #   rides along and prunes nothing away).
-# - per-(cell, pos) component sums: AdditiveGoldSink (replay-safe
-#   batch-id marker); centroids are assembled at read time by the same
+# - per-(cell, pos) component sums: AdditiveGoldSink under centsums/
+#   (replay-safe batch-id marker, one parquet snapshot per version);
+#   centroids are assembled at read time by the same
 #   collect_list/array_sort shape _cell_centroids uses. Values are
-#   integer-valued doubles, exact below 2^53.
+#   integer-valued doubles, exact below 2^53. Its marker is the index's
+#   one commit record: it also pins the layout (quant, meta_cols) and
+#   holds the corpus's compaction state. Index directories written
+#   before that (a layout.json and a corpus_compaction.json beside it)
+#   do not resume; rebuild them.
 #
 # Scale: per batch = quantize + one explode/partial-agg (|batch| x dim
 # rows) + a keyed merge into a |cells x dim| running table — dimension-
@@ -120,7 +125,6 @@ class IvfIndexSink:
                  read_only: bool = False,
                  compact_every: int | None = 16, keep_recent: int = 4,
                  max_chunks: int = 8):
-        import json
         import os
 
         from flinkrealtimedatawarehouse_spark.datapipeline import similarity
@@ -140,35 +144,23 @@ class IvfIndexSink:
             os.path.join(out_dir, "centsums"), keys=["cell", "pos"],
             measures={"s": ("qv", "sum")}, read_only=read_only,
         )
+        # quant and meta_cols are part of the on-disk layout (same rule as
+        # the postings index): a handle with a different quant would
+        # quantize probes on a different grid than the stored corpus and
+        # centroid sums, silently shifting near-tie rankings
+        self.cent.pin_layout(
+            {"quant": self.quant, "meta_cols": self.meta_cols},
+            "a mismatched quant or meta_cols set silently degrades results",
+        )
         self.compact_every = compact_every
         # as-of reads filter batch, then cell-pruned scans re-rank: sort
         # chunk rows by batch so its row-group envelopes stay tight
         self.store = TieredAppendStore(
-            os.path.join(out_dir, "corpus"), "cell", sort_cols=["batch"],
-            fence_check=None if read_only else self.cent._check_fence,
+            os.path.join(out_dir, "corpus"), "cell", self.cent,
+            sort_cols=["batch"],
             compact_every=compact_every or 16, keep_recent=keep_recent,
             max_chunks=max_chunks,
         )
-        # layout marker (same rule as the postings index): quant and
-        # meta_cols are part of the on-disk layout — a handle with a
-        # different quant would quantize probes on a different grid than
-        # the stored corpus/centroid sums, silently shifting near-tie
-        # rankings instead of erroring. Write-once by the writer;
-        # validated by every handle, read handles adopt nothing blindly.
-        meta = os.path.join(out_dir, "layout.json")
-        layout = {"quant": self.quant, "meta_cols": self.meta_cols}
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f)
-            if stored != layout:
-                raise ValueError(
-                    f"IVF index at {out_dir} has layout {stored}; this handle "
-                    f"was constructed with {layout} — a mismatched quant or "
-                    "meta_cols set silently degrades results, so refuse"
-                )
-        elif not read_only:
-            os.makedirs(out_dir, exist_ok=True)
-            write_json_atomic(meta, layout)
 
     def _corpus_rows(self, batch: DataFrame) -> DataFrame:
         from flinkrealtimedatawarehouse_spark.datapipeline.similarity import quantized
@@ -185,10 +177,10 @@ class IvfIndexSink:
     def write_batch(self, batch: DataFrame, batch_id: int) -> None:
         import os
 
-        if batch_id <= self.store.folded_through():
-            # redelivery of a batch already folded into a chunk: writing
-            # its corpus directory back would double the rows, and its
-            # centroid fold committed before it became foldable — no-op
+        if self.cent.seen(batch_id):
+            # redelivery: its corpus landed before its centroid commit, and
+            # may since live in a chunk, where a rewritten corpus directory
+            # would double the rows — a no-op
             return
         corpus = self._corpus_rows(batch)
         # two actions read this lineage (corpus write + centroid fold);
@@ -281,7 +273,12 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     pruning first, then the row filter pushed into the pruned scan, and
     the top-k ranks only qualifying neighbors). The probed-cell list
     collects to the driver, bounded by |probes| x n_probe (the pruning
-    predicate, not data movement)."""
+    predicate, not data movement).
+
+    One commit per search: a read handle re-reads the marker once, and
+    the centroids and the corpus horizon (its ``last_bid``) both come
+    from that load, so cells are never ranked by older centroids than
+    the corpus they select from."""
     from flinkrealtimedatawarehouse_spark.datapipeline.similarity import (
         _cell_rerank,
         _rank_probe_cells,
@@ -292,6 +289,9 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
         F.col(sink.id_col).alias("probe_id"),
         quantized(F.col(sink.vec_col), sink.quant).alias("qp"),
     )
+    if sink.cent.read_only:
+        sink.cent.refresh()
+    horizon = sink.cent.last_bid if as_of_batch is None else as_of_batch
     probe_cells = _rank_probe_cells(
         probe_q, sink.centroids(spark, as_of_batch), n_probe
     )
@@ -303,7 +303,7 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     # part_vals constructs the scan from the probed cells' own partition
     # directories (round 15, guide §6) — identical rows to the old
     # read().filter(isin), without listing every unprobed cell dir
-    corpus = sink.store.read(spark, as_of_batch, part_vals=cells)
+    corpus = sink.store.read(spark, horizon, part_vals=cells)
     if corpus_filter is not None:
         corpus = corpus.filter(corpus_filter)
     return _cell_rerank(corpus, probe_cells, k)

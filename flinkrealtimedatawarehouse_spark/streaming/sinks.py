@@ -284,11 +284,6 @@ class AdditiveGoldSink(VersionedSnapshotSink):
         self.keys = keys
         self.measures = measures
 
-    def current(self, spark: SparkSession) -> DataFrame | None:
-        if self.version < 0:
-            return None
-        return super().current(spark)
-
     def _partial(self, batch: DataFrame) -> DataFrame:
         aggs = []
         for out, (col, fn) in self.measures.items():

@@ -48,7 +48,14 @@ def write_json_atomic(path: str, obj) -> None:
 
 class VersionedSnapshotSink:
     """Base: versioned snapshots under ``base_dir`` with a committed
-    marker carrying (version, last_bid, lineage, meta).
+    marker, ``_committed.json``, carrying (version, last_bid,
+    min_version, lineage, meta). ``meta`` is the sink's own commit
+    record, written in the same atomic replace as the version pointer:
+    the layout pinned by ``pin_layout``; for a streamed index's owning
+    sink also the tiered compaction state under ``"compaction"``
+    (``folded_through``, ``chunks``, ``next_id``) and, for the postings
+    index, the corpus totals ``(n_docs, sum_dl)`` of every retained
+    version under ``"stats"``.
 
     CAVEAT — the replay guard is only sound within ONE streaming-query
     lineage: foreachBatch batch ids restart at 0 under a fresh
@@ -88,22 +95,15 @@ class VersionedSnapshotSink:
         self.meta: dict = {}
         self.read_only = read_only
         self._writer_id = uuid.uuid4().hex
-        marker = self._marker_path()
-        if os.path.exists(marker):  # restart: resume committed state
-            with open(marker) as f:
-                state = json.load(f)
-            committed = state.get("lineage")
-            if lineage is not None and committed is not None and committed != lineage:
-                raise ValueError(
-                    f"snapshot dir {self.base_dir!r} belongs to lineage "
-                    f"{committed!r}, not {lineage!r}: batch-id replay guards "
-                    "do not transfer across streaming checkpoints — use a "
-                    "fresh sink dir for a new query"
-                )
-            self.version = state["version"]
-            self.last_bid = state["last_bid"]
-            self.min_version = state.get("min_version", 0)
-            self.meta = state.get("meta", {})
+        state = self.refresh()  # restart: resume committed state
+        committed = (state or {}).get("lineage")
+        if lineage is not None and committed is not None and committed != lineage:
+            raise ValueError(
+                f"snapshot dir {self.base_dir!r} belongs to lineage "
+                f"{committed!r}, not {lineage!r}: batch-id replay guards "
+                "do not transfer across streaming checkpoints — use a "
+                "fresh sink dir for a new query"
+            )
         # a READ handle must not claim the dir: claiming fences the live
         # writer (single-writer contract), and serving-side readers — the
         # streamed-index searches, the wide-gold live views — would
@@ -111,6 +111,41 @@ class VersionedSnapshotSink:
         # the last committed marker and never commit.
         if not read_only:
             self._claim()
+
+    def refresh(self) -> dict | None:
+        """Re-read the committed marker into this handle (version,
+        last_bid, min_version, meta) and return it; None if no marker
+        exists yet. A read handle calls this to see the live writer's
+        later commits."""
+        try:
+            with open(self._marker_path()) as f:
+                state = json.load(f)
+        except FileNotFoundError:
+            return None
+        self.version = state["version"]
+        self.last_bid = state["last_bid"]
+        self.min_version = state.get("min_version", 0)
+        self.meta = state.get("meta", {})
+        return state
+
+    def pin_layout(self, layout: dict, why: str) -> None:
+        """Pin the parameters that shape the on-disk data (a bucket
+        modulus, a quantization grid, a partition routing) in the marker's
+        ``meta``. A handle opened with other values raises ``ValueError``:
+        data laid out two ways in one directory is read wrong without an
+        error (``why`` says how). A writer on a dir whose marker holds no
+        layout commits it here, before any batch, so a crash after the
+        first batch cannot leave the layout unrecorded."""
+        stored = {k: self.meta[k] for k in layout if k in self.meta}
+        if stored and stored != layout:
+            raise ValueError(
+                f"{self.base_dir!r} was written with "
+                + ", ".join(f"{k}={v}" for k, v in stored.items())
+                + f", not {layout}: {why}"
+            )
+        if not stored and not self.read_only:
+            self.meta.update(layout)
+            self._commit()
 
     def _path(self, v: int) -> str:
         return os.path.join(self.base_dir, f"v{v}")
@@ -216,8 +251,9 @@ class VersionedSnapshotSink:
         self._write_snapshot(empty, 0)
         self._commit()
 
-    def current(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._path(self.version))
+    def current(self, spark: SparkSession) -> DataFrame | None:
+        """The committed table; None before the first commit."""
+        return None if self.version < 0 else self.read_version(spark, self.version)
 
     def versions(self) -> list[int]:
         """Committed snapshot versions available for time travel (every
@@ -228,16 +264,19 @@ class VersionedSnapshotSink:
             return []
         return list(range(self.min_version, self.version + 1))
 
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
-        """Time travel: the table as of snapshot ``version`` — the parquet
-        container's stand-in for Delta's ``VERSION AS OF`` (each micro-batch
-        commit created one version, so this is also *as of batch N*)."""
+    def _check_retained(self, version: int) -> None:
         if version < self.min_version or version > self.version:
             raise ValueError(
                 f"version {version} not available (retained: "
                 f"{self.min_version}..{self.version}; older versions may "
                 "have been vacuumed)"
             )
+
+    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
+        """Time travel: the table as of snapshot ``version`` — the parquet
+        container's stand-in for Delta's ``VERSION AS OF`` (each micro-batch
+        commit created one version, so this is also *as of batch N*)."""
+        self._check_retained(version)
         return spark.read.parquet(self._path(version))
 
     def vacuum(self, keep_last: int) -> list[int]:

@@ -183,17 +183,56 @@ def _run_ivfidx(spark, base_dir, crash_batch=None):
     return [tuple(r) for r in out]
 
 
-@pytest.mark.slow
-def test_ivf_index_restart_mid_batch_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("crash_at", [
+    0, pytest.param(1, marks=pytest.mark.slow),
+    pytest.param(2, marks=pytest.mark.slow),
+])
+def test_ivf_index_restart_mid_batch_exactly_once(spark, tmp_path, crash_at):
     """Streamed IVF index: a crash between the corpus append and the
     centroid-sum marker must not double-fold the sums (which would move
     every centroid and re-rank cells) or lose the batch's vectors."""
     clean = _run_ivfidx(spark, str(tmp_path / "clean"))
     assert clean and clean[0][3] == 1  # ranked results, rank starts at 1
-    for crash_at in (0, 1, 2):
-        got = _run_ivfidx(spark, str(tmp_path / f"crash{crash_at}"),
-                          crash_batch=crash_at)
-        assert got == clean, f"streamed IVF index diverged after crash at batch {crash_at}"
+    got = _run_ivfidx(spark, str(tmp_path / f"crash{crash_at}"),
+                      crash_batch=crash_at)
+    assert got == clean, f"streamed IVF index diverged after crash at batch {crash_at}"
+
+
+def test_ivf_read_handle_ranks_cells_with_the_commit_it_reads(spark, tmp_path):
+    """A long-lived IVF read handle must answer like the writer after the
+    writer commits more batches: the centroids that pick the probed
+    cells and the corpus rows re-ranked inside them come from the same
+    marker load. Here batches 1-2 swing the probe's nearest centroid from
+    cell 0 to cell 1, so centroids frozen at the handle's opening would
+    probe the wrong cell over the newer corpus. Batch 2 also folds
+    batches 0-1 into a chunk, so a corpus read through the handle must
+    pick up the compaction state committed after it was opened."""
+    from flinkrealtimedatawarehouse_spark.streaming.simsearch import (
+        IvfIndexSink,
+        streamed_ivf_topk,
+    )
+
+    schema = "vec_id long, embedding array<double>, label int"
+    batches = [
+        [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 1)],
+        [(3, [0.0, -1.0], 0), (4, [1.0, 0.0], 1), (5, [0.9, 0.1], 1)],
+        [(6, [0.1, -1.0], 0), (7, [1.0, 0.2], 1)],
+    ]
+    base = str(tmp_path / "ivf")
+    writer = IvfIndexSink(base, "vec_id", "embedding", "label",
+                          compact_every=2, keep_recent=1)
+    writer.write_batch(spark.createDataFrame(batches[0], schema), 0)
+    reader, lister = (IvfIndexSink(base, "vec_id", "embedding", "label",
+                                   read_only=True) for _ in range(2))
+    for bid in (1, 2):
+        writer.write_batch(spark.createDataFrame(batches[bid], schema), bid)
+    assert writer.store.folded_through() == 1
+    assert sorted(r.neighbor_id for r in lister.store.read(spark).collect()) == list(range(1, 8))
+    probes = spark.createDataFrame([(100, [0.9, 0.3], 0)], schema)
+    want = streamed_ivf_topk(spark, writer, probes, k=3, n_probe=1).collect()
+    got = streamed_ivf_topk(spark, reader, probes, k=3, n_probe=1).collect()
+    assert [r.neighbor_id for r in want] == [7, 5, 4]  # cell 1 is probed
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_reader_handles_do_not_fence_the_index_writer(spark, tmp_path):
@@ -223,17 +262,81 @@ def test_reader_handles_do_not_fence_the_index_writer(spark, tmp_path):
         ro.vacuum(keep_last=1)
 
 
-@pytest.mark.slow
-def test_postings_index_restart_mid_batch_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("crash_at", [
+    pytest.param(0, marks=pytest.mark.slow), 1,
+    pytest.param(2, marks=pytest.mark.slow),
+])
+def test_postings_index_restart_mid_batch_exactly_once(spark, tmp_path, crash_at):
     """dp25 streamed index: a crash between the postings write and the
     stats marker must not double-count n_docs/sum_dl (which would shift
     every BM25 idf/avgdl) or lose the batch's postings on replay."""
     clean = _run_postidx(spark, str(tmp_path / "clean"))
     assert clean and clean[0][1] == 1  # ranked results, rank starts at 1
-    for crash_at in (0, 1, 2):
-        got = _run_postidx(spark, str(tmp_path / f"crash{crash_at}"),
-                           crash_batch=crash_at)
-        assert got == clean, f"streamed index diverged after crash at batch {crash_at}"
+    got = _run_postidx(spark, str(tmp_path / f"crash{crash_at}"),
+                       crash_batch=crash_at)
+    assert got == clean, f"streamed index diverged after crash at batch {crash_at}"
+
+
+def test_postings_search_reads_one_commit_after_a_crash_mid_batch(spark, tmp_path):
+    """Batches 0-1 committed; batch 2's postings landed but its marker
+    commit died, and no restart has replayed it yet. A current search
+    must answer exactly like the batch engine over batches 0-1, not
+    score batch 2's postings against the corpus totals of 0-1."""
+    from flinkrealtimedatawarehouse_spark.datapipeline import textstats
+    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
+        PostingsIndexSink,
+        streamed_postings_search,
+    )
+
+    base = str(tmp_path / "idx")
+    sink = PostingsIndexSink(base, "doc_id", "text", n_buckets=8)
+    for bid, rows in enumerate([B0, B1]):
+        sink.write_batch(_docs(spark, rows), bid)
+    _arm_marker_crash(sink.stats)
+    with pytest.raises(_CrashInjected):
+        sink.write_batch(_docs(spark, B2), 2)
+    assert os.path.isdir(os.path.join(base, "postings", "batch=2"))
+    q = "quick fox spark"
+    got = streamed_postings_search(spark, base, "doc_id", q, k=10).collect()
+    expect = textstats.bm25_search(
+        _docs(spark, B0 + B1), "doc_id", "text", q, k=10).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in expect]
+
+
+def test_index_dirs_hold_one_commit_record(spark, tmp_path):
+    """Each streamed index commits through its owning sink's marker
+    alone: layout, compaction state and (postings) corpus totals live in
+    ``_committed.json`` — no layout.json, no ``*_compaction.json``, no
+    per-batch stats snapshots."""
+    import json
+
+    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
+        PostingsIndexSink,
+    )
+    from flinkrealtimedatawarehouse_spark.streaming.simsearch import IvfIndexSink
+
+    post = str(tmp_path / "post")
+    sink = PostingsIndexSink(post, "doc_id", "text", n_buckets=4,
+                             compact_every=2, keep_recent=1, max_chunks=2)
+    for bid, rows in enumerate([B0, B1, B2]):
+        sink.write_batch(_docs(spark, rows), bid)
+    assert sink.store.folded_through() == 1  # a fold ran
+    assert sorted(os.listdir(post)) == [
+        "_committed.json", "_writer.json", "postings", "postings_chunks"]
+    with open(os.path.join(post, "_committed.json")) as f:
+        meta = json.load(f)["meta"]
+    assert meta["n_buckets"] == 4 and len(meta["stats"]) == 3
+    assert meta["compaction"]["folded_through"] == 1
+
+    ivf = str(tmp_path / "ivf")
+    vsink = IvfIndexSink(ivf, "vec_id", "embedding", "label",
+                         compact_every=2, keep_recent=1, max_chunks=2)
+    schema = "vec_id long, embedding array<double>, label int"
+    for bid in range(3):
+        vsink.write_batch(spark.createDataFrame(
+            [(bid * 2 + i, [float(i), 1.0], i) for i in (1, 2)], schema), bid)
+    assert vsink.store.folded_through() == 1
+    assert sorted(os.listdir(ivf)) == ["centsums", "corpus", "corpus_chunks"]
 
 
 def _run_scd2(spark, base_dir, crash_batch=None):
@@ -580,13 +683,17 @@ def test_chain_restart_mid_batch_state_recovers(spark, tmp_path):
         assert got == clean, f"chain diverged after crash at batch {crash_at}"
 
 
-@pytest.mark.slow
-def test_compaction_crash_between_marker_and_cleanup(spark, tmp_path):
+@pytest.mark.parametrize("deleted_before_crash", [
+    0, pytest.param(2, marks=pytest.mark.slow),
+])
+def test_compaction_crash_between_marker_and_cleanup(spark, tmp_path,
+                                                     deleted_before_crash):
     """Tiered compaction's write-then-commit contract: if the process
     dies AFTER the compaction marker commits but BEFORE the folded tail
-    directories are deleted, the read path must already ignore the
-    orphans (their rows live in the chunk; counting both would double
-    every posting) and the next policy run must sweep them."""
+    directories are deleted (none, or only some of them), the read path
+    must already ignore the orphans (their rows live in the chunk;
+    counting both would double every posting) and the next policy run
+    must sweep them."""
     import shutil as _shutil
 
     from flinkrealtimedatawarehouse_spark.datapipeline import textstats
@@ -624,7 +731,8 @@ def test_compaction_crash_between_marker_and_cleanup(spark, tmp_path):
             _shutil.rmtree = real_rmtree
     st = sink.store._load()
     assert st["folded_through"] == 3 and stashed  # fold ran, dirs captured
-    for orig, dst in stashed.items():  # resurrect the "undeleted" dirs
+    # resurrect the dirs the cleanup had not reached when it "died"
+    for orig, dst in list(stashed.items())[deleted_before_crash:]:
         _shutil.copytree(dst, orig)
 
     # read path ignores the orphans: equals the batch engine, no doubling
@@ -640,12 +748,16 @@ def test_compaction_crash_between_marker_and_cleanup(spark, tmp_path):
     assert all(b > st["folded_through"] for b in left), left
 
 
-@pytest.mark.slow
-def test_compaction_crash_before_marker_is_invisible(spark, tmp_path):
+@pytest.mark.parametrize("doomed_through", [
+    1, pytest.param(3, marks=pytest.mark.slow),
+])
+def test_compaction_crash_before_marker_is_invisible(spark, tmp_path,
+                                                      doomed_through):
     """The other half of write-then-commit: a chunk directory written by
-    a fold that died BEFORE its marker commit must be invisible to reads
-    and harmlessly overwritten by the next successful fold (next_id was
-    never advanced)."""
+    a fold that died BEFORE its marker commit — mid-write (part of the
+    fold's batches) or just before the commit (all of them) — must be
+    invisible to reads and harmlessly overwritten by the next successful
+    fold (next_id was never advanced)."""
     from flinkrealtimedatawarehouse_spark.datapipeline import textstats
     from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
         PostingsIndexSink,
@@ -667,7 +779,7 @@ def test_compaction_crash_before_marker_is_invisible(spark, tmp_path):
     st0 = sink.store._load()
     doomed = sink.store.tail_dir + "_chunks/c000000"
     spark.read.parquet(sink.store.tail_dir).filter(
-        F.col("batch") <= 1
+        F.col("batch") <= doomed_through
     ).write.mode("overwrite").partitionBy("bucket").parquet(doomed)
     assert sink.store._load() == st0  # marker untouched
 

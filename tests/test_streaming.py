@@ -2252,9 +2252,11 @@ def test_tiered_read_repeated_part_vals_reads_each_row_once(spark, tmp_path):
     24-root cap of one explicit-path reader, and past it the read fell
     back to listing and scanning every leaf."""
     from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
+    from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
 
     tail = tmp_path / "tail"
-    store = TieredAppendStore(str(tail), "bucket", compact_every=1, keep_recent=1)
+    store = TieredAppendStore(str(tail), "bucket", VersionedSnapshotSink(str(tmp_path)),
+                              compact_every=1, keep_recent=1)
     for b in range(3):
         rows = [(b * 10 + i, i % 2) for i in range(4)]
         spark.createDataFrame(rows, "id long, bucket int").write.partitionBy("bucket").parquet(
