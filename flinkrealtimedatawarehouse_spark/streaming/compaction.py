@@ -1,10 +1,21 @@
-"""Automated tiered compaction for batch-partitioned streamed indexes.
+"""The streamed indexes' shared machinery: one commit record, one
+micro-batch writer and automated tiered compaction.
 
 The streamed postings (``searchindex.PostingsIndexSink``) and IVF
-(``simsearch.IvfIndexSink``) indexes are append-only: every micro-batch
-writes its own ``batch=<id>/<part>=<v>/`` parquet partition, which is
-what makes the write path replay-safe and O(|batch|). The measured cost
-of that layout (SCALE.md round 10): at only 32 batches x 64 buckets the
+(``simsearch.IvfIndexSink``) indexes are both a ``StreamedIndexSink``:
+per micro-batch the index rows land in the batch's own
+``batch=<id>/<part>=<v>/`` parquet partition (replay-safe, O(|batch|)),
+and the batch's totals (postings: ``[n_docs, sum_dl]``; IVF: the
+per-cell centroid component sums) are folded into the previous
+version's and committed in the index's one marker, an ``IndexCommit``
+at the index root. The index supplies only its row and totals
+functions; the replay guard, persist, partition write, commit and
+compaction order is shared. A search reads one commit
+(``IndexCommit.read_commit``): the totals and the corpus horizon come
+from one marker load.
+
+Tiered compaction. The append-only layout's measured cost (SCALE.md
+round 10): at only 32 batches x 64 buckets the
 directory listing alone is 1,922 leaves and ~4.5 s/query; at 100 TB a
 micro-batch stream produces THOUSANDS of batch partitions and the
 serving read path decays without bound. Round 10 documented manual
@@ -73,6 +84,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
 
 
 class TieredAppendStore:
@@ -341,3 +354,102 @@ class TieredAppendStore:
         """Parquet files reachable by a current-state read (the bounded-
         layout assertion material for tests and SCALE.md)."""
         return len(self.read(spark).inputFiles())
+
+
+class IndexCommit(VersionedSnapshotSink):
+    """A streamed index's commit record: the marker at the index root.
+    One version per applied batch (ids sequential from 0, so version ==
+    batch id); ``meta["stats"]`` holds the index totals of every
+    retained version, oldest first. ``add`` folds a batch's totals into
+    the previous version's; ``frame`` turns totals into the DataFrame
+    ``read_version`` returns. No snapshot directories: the totals are
+    the whole state."""
+
+    def __init__(self, base_dir: str, add, frame, read_only: bool = False):
+        self._add, self.frame = add, frame
+        super().__init__(base_dir, read_only=read_only)
+
+    def totals(self, version: int):
+        self._check_retained(version)
+        return self.meta["stats"][version - self.min_version]
+
+    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
+        return self.frame(spark, self.totals(version))
+
+    def read_commit(self, as_of_batch: int | None = None):
+        """``(totals, horizon)`` of one marker load: the current totals
+        and ``last_bid``, or those as of ``as_of_batch``. A read handle
+        re-reads the marker first, so it sees the writer's later
+        commits; rows past the horizon belong to no commit it read."""
+        if self.read_only:
+            self.refresh()
+        if self.version < 0:
+            raise ValueError(f"streamed index at {self.base_dir} has no committed batches")
+        if as_of_batch is None:
+            return self.totals(self.version), self.last_bid
+        return self.totals(as_of_batch), as_of_batch
+
+    def commit_batch(self, batch_id: int, totals) -> None:
+        if self.read_only:
+            raise RuntimeError("read-only snapshot handle cannot commit")
+        hist = self.meta.setdefault("stats", [])
+        hist.append(self._add(hist[-1], totals) if hist else totals)
+        self.version += 1
+        self.last_bid = batch_id
+        self._commit()
+
+    def vacuum(self, keep_last: int) -> list[int]:
+        """Drop the totals of all but the newest ``keep_last`` versions
+        (as-of search before them then raises); returns the dropped
+        versions."""
+        if keep_last < 1:
+            raise ValueError("keep_last must be >= 1")
+        if self.read_only:
+            raise RuntimeError("read-only snapshot handle cannot vacuum")
+        new_min = max(self.min_version, self.version - keep_last + 1)
+        removed = list(range(self.min_version, new_min))
+        if removed:
+            del self.meta["stats"][:len(removed)]
+            self.min_version = new_min
+            self._commit()
+        return removed
+
+
+class StreamedIndexSink:
+    """foreachBatch writer shared by the streamed indexes. Per batch:
+    drop a replay, persist the batch's rows, write the batch's own
+    ``batch=<id>`` partition, collect the batch's totals, commit them
+    (added to the previous version's) in ``stats``, then run the tiered
+    compaction policy (``compact_every=None`` disables it). Rows land
+    before the commit, so a crash between the two replays the batch on
+    restart: the partition overwrite is a no-op and the totals apply
+    once; compaction folds only committed batches. An index supplies
+    ``_rows(batch) -> (cached, rows)`` (the persisted lineage and the
+    partition rows derived from it) and ``_totals(cached)``."""
+
+    def __init__(self, stats: IndexCommit, store: TieredAppendStore,
+                 compact_every: int | None):
+        self.stats, self.store, self.compact_every = stats, store, compact_every
+
+    def write_batch(self, batch: DataFrame, batch_id: int) -> None:
+        if self.stats.seen(batch_id):
+            # redelivered batch: its rows landed before its commit, and
+            # may since live in a compacted chunk, where a recreated tail
+            # directory would count them twice — a no-op
+            return
+        cached, rows = self._rows(batch)
+        # two actions read this lineage (partition write + totals);
+        # batch-scoped persist so it is computed once, not twice
+        cached.persist()
+        try:
+            # idempotent under replay: the batch owns this directory
+            rows.write.mode("overwrite").partitionBy(self.store.part_col).parquet(
+                os.path.join(self.store.tail_dir, f"batch={batch_id}")
+            )
+            totals = self._totals(cached)
+        finally:
+            cached.unpersist()
+        self.stats.commit_batch(batch_id, totals)
+        if self.compact_every is not None:
+            # after the commit: only committed batches ever fold
+            self.store.maybe_compact(batch.sparkSession, self.stats.last_bid)

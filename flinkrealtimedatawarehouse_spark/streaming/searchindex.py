@@ -29,8 +29,8 @@ Incremental design — what makes this cheap per batch:
 - **Corpus scalars are two integers in the commit record.** Each
   batch's (n_docs, sum_dl) comes from one aggregate over its persisted
   tokens and is added to the previous totals in the index's marker
-  (``_committed.json`` at the index root, a
-  ``snapshots.VersionedSnapshotSink`` with its replay guard and writer
+  (``_committed.json`` at the index root, a ``compaction.IndexCommit``
+  with the ``snapshots.VersionedSnapshotSink`` replay guard and writer
   fence), one entry per version for as-of search; avgdl = sum_dl /
   n_docs. Integer sums, so the streamed avgdl is bit-identical to the
   batch ``avg(size(toks))`` regardless of how the stream was split.
@@ -56,7 +56,10 @@ tests/test_streaming.py::test_auto_compaction_bounds_postings_layout.
 
 One commit record: the marker holds the bucket modulus, the compaction
 state and the totals, so the index directory is the marker, the writer
-claim, ``postings/`` and ``postings_chunks/``. Index directories written
+claim, ``postings/`` and ``postings_chunks/``. The IVF index
+(``simsearch.IvfIndexSink``) keeps the same record and shares the
+writer (``compaction.StreamedIndexSink``); this module supplies only
+the postings rows and the two-integer totals. Index directories written
 before the marker carried all three (a ``layout.json``, a
 ``postings_compaction.json`` and ``stats/`` parquet snapshots) do not
 resume; rebuild them.
@@ -84,59 +87,31 @@ from flinkrealtimedatawarehouse_spark.datapipeline.textstats import (
     _term_buckets,
     query_terms,
 )
-from flinkrealtimedatawarehouse_spark.streaming.compaction import TieredAppendStore
-from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
+from flinkrealtimedatawarehouse_spark.streaming.compaction import (
+    IndexCommit,
+    StreamedIndexSink,
+    TieredAppendStore,
+)
 
 
-class PostingsStats(VersionedSnapshotSink):
-    """The postings index's commit record: the marker at the index root.
-    One version per applied batch (ids sequential from 0, so version ==
-    batch id); ``meta["stats"]`` holds the corpus totals ``[n_docs,
-    sum_dl]`` of every retained version, oldest first. No snapshot
-    directories: the totals are the whole state."""
-
-    def totals(self, version: int) -> tuple[int, int]:
-        self._check_retained(version)
-        n_docs, sum_dl = self.meta["stats"][version - self.min_version]
-        return n_docs, sum_dl
-
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
-        """One-row ``(n_docs, sum_dl)`` frame as of ``version``."""
-        return spark.createDataFrame(
-            [tuple(map(float, self.totals(version)))],
-            "n_docs double, sum_dl double",
-        )
-
-    def commit_batch(self, batch_id: int, n_docs: int, sum_dl: int) -> None:
-        hist = self.meta.setdefault("stats", [])
-        prev = hist[-1] if hist else [0, 0]
-        hist.append([prev[0] + n_docs, prev[1] + sum_dl])
-        self.version += 1
-        self.last_bid = batch_id
-        self._commit()
-
-    def vacuum(self, keep_last: int) -> list[int]:
-        """Drop the totals of all but the newest ``keep_last`` versions
-        (as-of search before them then raises); returns the dropped
-        versions."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        if self.read_only:
-            raise RuntimeError("read-only snapshot handle cannot vacuum")
-        new_min = max(self.min_version, self.version - keep_last + 1)
-        removed = list(range(self.min_version, new_min))
-        if removed:
-            del self.meta["stats"][:len(removed)]
-            self.min_version = new_min
-            self._commit()
-        return removed
+def _add_totals(prev: list[int], batch: list[int]) -> list[int]:
+    return [a + b for a, b in zip(prev, batch)]
 
 
-def _stats_sink(out_dir: str, read_only: bool = False) -> PostingsStats:
-    return PostingsStats(out_dir, read_only=read_only)
+def _totals_frame(spark: SparkSession, totals: list[int]) -> DataFrame:
+    """One-row ``(n_docs, sum_dl)`` frame."""
+    return spark.createDataFrame(
+        [tuple(map(float, totals))], "n_docs double, sum_dl double"
+    )
 
 
-def _postings_store(out_dir: str, owner: PostingsStats, **policy) -> TieredAppendStore:
+def _stats_sink(out_dir: str, read_only: bool = False) -> IndexCommit:
+    """The index's commit record; ``meta["stats"]`` holds ``[n_docs,
+    sum_dl]`` per retained version."""
+    return IndexCommit(out_dir, _add_totals, _totals_frame, read_only=read_only)
+
+
+def _postings_store(out_dir: str, owner: IndexCommit, **policy) -> TieredAppendStore:
     # sort chunks by term first (every query filters terms: dictionary +
     # min/max prune within the bucket), batch second (as-of row filter)
     return TieredAppendStore(
@@ -145,16 +120,12 @@ def _postings_store(out_dir: str, owner: PostingsStats, **policy) -> TieredAppen
     )
 
 
-class PostingsIndexSink:
-    """foreachBatch writer that maintains the streamed inverted index:
-    per batch, (1) tokenize + tf-aggregate, (2) overwrite the batch's own
-    bucket-partitioned postings directory, (3) aggregate the batch's
-    (n_docs, sum_dl) and commit the new totals with the batch id in the
-    index marker (``stats``), (4) run the tiered compaction policy
-    (``compaction`` module; pass ``compact_every=None`` to disable).
-    Postings-before-marker ordering makes the pair recoverable (module
-    docstring); compaction folds only committed batches, and the marker's
-    replay guard drops a redelivered batch before it touches a file."""
+class PostingsIndexSink(StreamedIndexSink):
+    """foreachBatch writer that maintains the streamed inverted index
+    (``StreamedIndexSink.write_batch``): per batch, tokenize +
+    tf-aggregate into the batch's own bucket-partitioned postings
+    directory, and commit the batch's (n_docs, sum_dl), added to the
+    previous totals, in the index marker (``stats``)."""
 
     def __init__(self, out_dir: str, id_col: str, text_col: str,
                  n_buckets: int = POSTINGS_BUCKETS,
@@ -163,66 +134,49 @@ class PostingsIndexSink:
         self.out_dir = out_dir
         self.id_col, self.text_col = id_col, text_col
         self.n_buckets = n_buckets
-        self.stats = _stats_sink(out_dir)
+        stats = _stats_sink(out_dir)
         # the bucket modulus is part of the on-disk index (a mismatched
         # search-time modulus silently prunes REAL postings — same rule
         # as build_postings' stats row)
-        self.stats.pin_layout(
+        stats.pin_layout(
             {"n_buckets": n_buckets},
             "postings bucketed under two moduli would be silently pruned "
             "away at search time",
         )
-        self.compact_every = compact_every
-        self.store = _postings_store(
-            out_dir, self.stats,
+        super().__init__(stats, _postings_store(
+            out_dir, stats,
             compact_every=compact_every or 16, keep_recent=keep_recent,
             max_chunks=max_chunks,
-        )
+        ), compact_every)
 
-    def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self.stats.seen(batch_id):
-            # redelivered batch: its postings landed before its commit,
-            # and may since live in a compacted chunk, where a recreated
-            # tail directory would count them twice — a no-op
-            return
+    def _rows(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # the persisted lineage is the tokens: without it every document
+        # would be regex-tokenized twice per micro-batch. (Round 15
+        # measured a one-pass variant, the totals observed on the
+        # postings write, slower: its parquet stats fold then ran a
+        # LocalRelation plan per batch. The totals now commit as two
+        # integers in the marker, with no parquet write and no such
+        # plan; the aggregate over the cached toks is the whole cost.)
         toks = batch.select(
             F.col(self.id_col), spark_tokens(F.col(self.text_col)).alias("toks")
         ).filter(F.size("toks") > 0)
-        # two actions read this lineage (postings write + totals);
-        # without the batch-scoped persist every document would be
-        # regex-tokenized twice per micro-batch. (Round 15 measured a
-        # one-pass variant, the totals observed on the postings write,
-        # slower: its parquet stats fold then ran a LocalRelation plan
-        # per batch. The totals now commit as two integers in the marker,
-        # with no parquet write and no such plan; the aggregate over the
-        # cached toks is the whole cost.)
-        toks.persist()
-        try:
-            tf = (
-                toks.select(
-                    F.col(self.id_col), F.size("toks").alias("dl"),
-                    F.explode("toks").alias("term"),
-                )
-                .groupBy(self.id_col, "dl", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).cast("int"),
-                )
+        tf = (
+            toks.select(
+                F.col(self.id_col), F.size("toks").alias("dl"),
+                F.explode("toks").alias("term"),
             )
-            # idempotent under replay: the batch owns this directory
-            tf.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.out_dir, "postings", f"batch={batch_id}")
+            .groupBy(self.id_col, "dl", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn(
+                "bucket",
+                F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).cast("int"),
             )
-            n_docs, sum_dl = toks.agg(
-                F.count(F.lit(1)), F.sum(F.size("toks"))
-            ).first()
-        finally:
-            toks.unpersist()
-        self.stats.commit_batch(batch_id, n_docs, sum_dl or 0)
-        if self.compact_every is not None:
-            # after the commit: only committed batches ever fold
-            self.store.maybe_compact(batch.sparkSession, self.stats.last_bid)
+        )
+        return toks, tf
+
+    def _totals(self, toks: DataFrame) -> list[int]:
+        n_docs, sum_dl = toks.agg(F.count(F.lit(1)), F.sum(F.size("toks"))).first()
+        return [n_docs, sum_dl or 0]
 
 
 def stage_postings_input(docs: DataFrame, id_col: str, text_col: str,
@@ -296,13 +250,7 @@ def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
     auto-compaction has run, a plain directory read (identical to the
     pre-compaction plan) before it."""
     marker = _stats_sink(out_dir, read_only=True)
-    if marker.version < 0:
-        raise ValueError(f"postings index at {out_dir} has no committed batches")
-    if as_of_batch is None:
-        version, horizon = marker.version, marker.last_bid
-    else:
-        version = horizon = as_of_batch
-    n_docs, sum_dl = marker.totals(version)
+    (n_docs, sum_dl), horizon = marker.read_commit(as_of_batch)
     stats = spark.createDataFrame(
         [(float(n_docs), sum_dl / n_docs if n_docs else None)],
         "n_docs double, avgdl double",

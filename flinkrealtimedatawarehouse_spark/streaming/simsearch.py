@@ -17,14 +17,30 @@ the corpus side is never replicated (probe side broadcasts inside
 ``cosine_topk``), and the merge re-ranks O(probes × 2k) rows.
 Determinism: cosine rounds at 6 dp and ties break on neighbor_id, same
 as every batch path.
+
+The module also keeps the persisted IVF index streamed
+(``IvfIndexSink``, ``streamed_ivf_topk``): corpus rows append per batch,
+and the per-cell centroid sums are the index totals in its one commit
+record (``_committed.json`` at the index root, a
+``compaction.IndexCommit``), written by the micro-batch writer the
+postings index shares (``compaction.StreamedIndexSink``). See the
+section comment above ``IvfIndexSink``.
 """
 
 from __future__ import annotations
 
+import os
+from itertools import zip_longest
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flinkrealtimedatawarehouse_spark.datapipeline.similarity import cosine_topk
+from flinkrealtimedatawarehouse_spark.datapipeline import similarity
+from flinkrealtimedatawarehouse_spark.streaming.compaction import (
+    IndexCommit,
+    StreamedIndexSink,
+    TieredAppendStore,
+)
 from flinkrealtimedatawarehouse_spark.streaming.snapshots import VersionedSnapshotSink
 
 
@@ -56,7 +72,7 @@ class IncrementalTopKSink(VersionedSnapshotSink):
         if self.seen(batch_id):  # at-least-once redelivery: no-op
             return
         spark = batch.sparkSession
-        batch_topk = cosine_topk(
+        batch_topk = similarity.cosine_topk(
             batch, self.probes, self.id_col, self.vec_col, k=self.k
         )
         w = Window.partitionBy("probe_id").orderBy(
@@ -77,13 +93,13 @@ class IncrementalTopKSink(VersionedSnapshotSink):
 # --- streaming upkeep for the persisted IVF index --------------------------
 #
 # The persisted index (similarity.build_ivf_index) gets the same
-# continuous-maintenance treatment the BM25 postings got (searchindex.py):
-# vectors arrive in micro-batches, the index stays query-able, and the
-# maintained state equals a batch rebuild EXACTLY — not approximately —
-# because the shared centroid definition (_cell_centroids) is an
-# element-wise INTEGER sum of quantized components: integer sums are
-# associative, so folding per-batch partial sums through the additive
-# sink reproduces the batch sum bit-for-bit under any stream split.
+# continuous-maintenance treatment the BM25 postings got (searchindex.py),
+# through the same writer (compaction.StreamedIndexSink): vectors arrive
+# in micro-batches, the index stays query-able, and the maintained state
+# equals a batch rebuild EXACTLY — not approximately — because the shared
+# centroid definition (_cell_centroids) is an element-wise INTEGER sum of
+# quantized components: integer sums are associative, so adding per-batch
+# partial sums reproduces the batch sum bit-for-bit under any stream split.
 #
 # What's appended vs folded:
 # - corpus rows (neighbor_id, cell, qn): append-only — each batch writes
@@ -91,33 +107,53 @@ class IncrementalTopKSink(VersionedSnapshotSink):
 #   overwriting only its own directory. Search prunes by cell exactly as
 #   against the batch-built layout (the extra batch partition column
 #   rides along and prunes nothing away).
-# - per-(cell, pos) component sums: AdditiveGoldSink under centsums/
-#   (replay-safe batch-id marker, one parquet snapshot per version);
-#   centroids are assembled at read time by the same
-#   collect_list/array_sort shape _cell_centroids uses. Values are
-#   integer-valued doubles, exact below 2^53. Its marker is the index's
-#   one commit record: it also pins the layout (quant, meta_cols) and
-#   holds the corpus's compaction state. Index directories written
-#   before that (a layout.json and a corpus_compaction.json beside it)
-#   do not resume; rebuild them.
+# - per-cell centroid sums: each batch collects _cell_centroids of its
+#   own persisted corpus rows (at most cells x dim integers) and adds
+#   them element-wise, in exact Python integers, to the previous
+#   version's. The index marker (_committed.json at the index root, the
+#   same commit record as the postings index) holds them per version
+#   beside the layout pin (quant, meta_cols) and the corpus's compaction
+#   state. Index directories written before that (with a centsums/
+#   directory, or a layout.json and a corpus_compaction.json) do not
+#   resume; rebuild them.
 #
-# Scale: per batch = quantize + one explode/partial-agg (|batch| x dim
-# rows) + a keyed merge into a |cells x dim| running table — dimension-
-# bounded, never corpus-bounded. Centroid drift is the documented
-# operational caveat of any frozen coarse quantizer: here cells come
-# from the assignment column, and the centroids themselves keep moving
-# with the data because the sums fold continuously.
+# Scale: per batch = quantize + one partitioned write + one cells x dim
+# aggregate collected to the driver — dimension-bounded, never
+# corpus-bounded; the marker grows cells x dim integers per retained
+# version (IndexCommit.vacuum trims it). Centroid drift is the documented
+# operational caveat of any frozen coarse quantizer: here cells come from
+# the assignment column, and the centroids themselves keep moving with
+# the data because the sums fold continuously.
 
 
-class IvfIndexSink:
+def _add_cells(prev: list, batch: list) -> list:
+    """Element-wise per-cell sum of two ``[[cell, cvec], ...]`` tables;
+    a cell or position one side lacks (or holds null: SQL sum semantics)
+    takes the other side's value."""
+    out = dict(prev)
+    for cell, cvec in batch:
+        out[cell] = [b if a is None else a if b is None else a + b
+                     for a, b in zip_longest(out.get(cell, []), cvec)]
+    return [[cell, cvec] for cell, cvec in out.items()]
+
+
+def _cells_frame(spark: SparkSession, cells: list) -> DataFrame:
+    """``(cell, cvec)`` in _cell_centroids' shape."""
+    if not cells:
+        return spark.createDataFrame([], "cell bigint, cvec array<bigint>")
+    return spark.createDataFrame([tuple(c) for c in cells], ["cell", "cvec"])
+
+
+class IvfIndexSink(StreamedIndexSink):
     """foreachBatch writer maintaining the persisted IVF index
-    incrementally. ``streamed_ivf_topk`` answers searches from it,
-    identically to ``ivf_topk`` over the full corpus (gate- and
-    parity-tested). Corpus partitions run the same tiered compaction
-    policy as the postings index (``compaction`` module, on by default;
-    ``compact_every=None`` disables): recent batches stay as directories,
-    older ones fold into cell-partitioned chunks with ``batch`` demoted
-    to a sorted data column, size-tiered major merges bound chunk count."""
+    incrementally (``StreamedIndexSink.write_batch``). ``streamed_ivf_topk``
+    answers searches from it, identically to ``ivf_topk`` over the full
+    corpus (gate- and parity-tested). Corpus partitions run the same
+    tiered compaction policy as the postings index (``compaction``
+    module, on by default; ``compact_every=None`` disables): recent
+    batches stay as directories, older ones fold into cell-partitioned
+    chunks with ``batch`` demoted to a sorted data column, size-tiered
+    major merges bound chunk count."""
 
     def __init__(self, out_dir: str, id_col: str, vec_col: str,
                  label_col: str, quant: int | None = None,
@@ -125,105 +161,60 @@ class IvfIndexSink:
                  read_only: bool = False,
                  compact_every: int | None = 16, keep_recent: int = 4,
                  max_chunks: int = 8):
-        import os
-
-        from flinkrealtimedatawarehouse_spark.datapipeline import similarity
-        from flinkrealtimedatawarehouse_spark.streaming.compaction import (
-            TieredAppendStore,
-        )
-        from flinkrealtimedatawarehouse_spark.streaming.sinks import AdditiveGoldSink
-
         self.out_dir = out_dir
         self.id_col, self.vec_col, self.label_col = id_col, vec_col, label_col
         self.quant = similarity.QUANT if quant is None else quant
         self.meta_cols = list(meta_cols or [])
+        if os.path.isdir(os.path.join(out_dir, "centsums")):
+            # its commit record lives under centsums/, not at the root: a
+            # writer here would start over beside the old corpus batches
+            raise ValueError(f"IVF index at {out_dir} predates the root "
+                             "commit record (it holds centsums/): rebuild it")
         # read_only = a search-side handle over an index another process
-        # maintains: sees committed snapshots, never claims/fences the
+        # maintains: sees committed versions, never claims/fences the
         # live writer, and write_batch on it refuses to commit
-        self.cent = AdditiveGoldSink(
-            os.path.join(out_dir, "centsums"), keys=["cell", "pos"],
-            measures={"s": ("qv", "sum")}, read_only=read_only,
-        )
+        stats = IndexCommit(out_dir, _add_cells, _cells_frame, read_only=read_only)
         # quant and meta_cols are part of the on-disk layout (same rule as
         # the postings index): a handle with a different quant would
         # quantize probes on a different grid than the stored corpus and
         # centroid sums, silently shifting near-tie rankings
-        self.cent.pin_layout(
+        stats.pin_layout(
             {"quant": self.quant, "meta_cols": self.meta_cols},
             "a mismatched quant or meta_cols set silently degrades results",
         )
-        self.compact_every = compact_every
         # as-of reads filter batch, then cell-pruned scans re-rank: sort
         # chunk rows by batch so its row-group envelopes stay tight
-        self.store = TieredAppendStore(
-            os.path.join(out_dir, "corpus"), "cell", self.cent,
+        super().__init__(stats, TieredAppendStore(
+            os.path.join(out_dir, "corpus"), "cell", stats,
             sort_cols=["batch"],
             compact_every=compact_every or 16, keep_recent=keep_recent,
             max_chunks=max_chunks,
-        )
+        ), compact_every)
 
-    def _corpus_rows(self, batch: DataFrame) -> DataFrame:
-        from flinkrealtimedatawarehouse_spark.datapipeline.similarity import quantized
-
+    def _rows(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
         # meta_cols ride into the index rows for filtered vector search,
-        # same contract as build_ivf_index
-        return batch.select(
+        # same contract as build_ivf_index; persisted so every vector is
+        # quantized once for the corpus write and the centroid sums
+        corpus = batch.select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.label_col).alias("cell"),
-            quantized(F.col(self.vec_col), self.quant).alias("qn"),
+            similarity.quantized(F.col(self.vec_col), self.quant).alias("qn"),
             *[F.col(c) for c in self.meta_cols],
         )
+        return corpus, corpus
 
-    def write_batch(self, batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        if self.cent.seen(batch_id):
-            # redelivery: its corpus landed before its centroid commit, and
-            # may since live in a chunk, where a rewritten corpus directory
-            # would double the rows — a no-op
-            return
-        corpus = self._corpus_rows(batch)
-        # two actions read this lineage (corpus write + centroid fold);
-        # batch-scoped persist so every vector is quantized once, not twice
-        corpus.persist()
-        try:
-            # corpus lands before the centroid marker (crash between the
-            # two replays the batch: directory overwrite is a no-op, fold
-            # applies once — same ordering contract as PostingsIndexSink)
-            corpus.write.mode("overwrite").partitionBy("cell").parquet(
-                os.path.join(self.out_dir, "corpus", f"batch={batch_id}")
-            )
-            pos = corpus.select("cell", F.posexplode(F.col("qn")).alias("pos", "qv"))
-            self.cent.write_batch(pos, batch_id)
-        finally:
-            corpus.unpersist()
-        if self.compact_every is not None:
-            self.store.maybe_compact(batch.sparkSession, self.cent.last_bid)
+    def _totals(self, corpus: DataFrame) -> list:
+        cells = similarity._cell_centroids(corpus).collect()
+        return [[r.cell, list(r.cvec)] for r in cells]
 
     def centroids(self, spark: SparkSession,
                   as_of_batch: int | None = None) -> DataFrame:
         """The maintained centroid table, in _cell_centroids' exact shape
-        (cell, cvec) — integer-valued sums, bit-equal to a batch rebuild.
+        (cell, cvec) — integer sums, bit-equal to a batch rebuild.
         ``as_of_batch``: the table as it stood after that stream batch
-        committed (one snapshot version per applied batch)."""
-        if as_of_batch is not None:
-            cur = self.cent.read_version(spark, as_of_batch)
-        else:
-            cur = self.cent.current(spark)
-        if cur is None:
-            raise ValueError(f"IVF index at {self.out_dir} has no committed batches")
-        # cast the folded sums back to bigint: each per-component sum is
-        # integer-valued and far below 2^53 (exact in the double fold), and
-        # the bigint cvec keeps the downstream dot/sq-norm arithmetic on
-        # the batch path's exact integer types
-        return cur.select(
-            "cell", "pos", F.col("s").cast("bigint").alias("s")
-        ).groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("s")))),
-                lambda x: x["s"],
-            ).alias("cvec")
-        )
+        committed (one marker version per applied batch)."""
+        cells, _ = self.stats.read_commit(as_of_batch)
+        return _cells_frame(spark, cells)
 
 
 def stage_ivf_input(emb: DataFrame, id_col: str, vec_col: str,
@@ -279,21 +270,13 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     the centroids and the corpus horizon (its ``last_bid``) both come
     from that load, so cells are never ranked by older centroids than
     the corpus they select from."""
-    from flinkrealtimedatawarehouse_spark.datapipeline.similarity import (
-        _cell_rerank,
-        _rank_probe_cells,
-        quantized,
-    )
-
     probe_q = probes.select(
         F.col(sink.id_col).alias("probe_id"),
-        quantized(F.col(sink.vec_col), sink.quant).alias("qp"),
+        similarity.quantized(F.col(sink.vec_col), sink.quant).alias("qp"),
     )
-    if sink.cent.read_only:
-        sink.cent.refresh()
-    horizon = sink.cent.last_bid if as_of_batch is None else as_of_batch
-    probe_cells = _rank_probe_cells(
-        probe_q, sink.centroids(spark, as_of_batch), n_probe
+    cent, horizon = sink.stats.read_commit(as_of_batch)
+    probe_cells = similarity._rank_probe_cells(
+        probe_q, _cells_frame(spark, cent), n_probe
     )
     cells = [r.probe_cell
              for r in probe_cells.select("probe_cell").distinct().collect()]
@@ -306,4 +289,4 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     corpus = sink.store.read(spark, horizon, part_vals=cells)
     if corpus_filter is not None:
         corpus = corpus.filter(corpus_filter)
-    return _cell_rerank(corpus, probe_cells, k)
+    return similarity._cell_rerank(corpus, probe_cells, k)

@@ -52,10 +52,9 @@ class VersionedSnapshotSink:
     min_version, lineage, meta). ``meta`` is the sink's own commit
     record, written in the same atomic replace as the version pointer:
     the layout pinned by ``pin_layout``; for a streamed index's owning
-    sink also the tiered compaction state under ``"compaction"``
-    (``folded_through``, ``chunks``, ``next_id``) and, for the postings
-    index, the corpus totals ``(n_docs, sum_dl)`` of every retained
-    version under ``"stats"``.
+    sink (``compaction.IndexCommit``) also the tiered compaction state
+    under ``"compaction"`` (``folded_through``, ``chunks``, ``next_id``)
+    and the index totals of every retained version under ``"stats"``.
 
     CAVEAT — the replay guard is only sound within ONE streaming-query
     lineage: foreachBatch batch ids restart at 0 under a fresh

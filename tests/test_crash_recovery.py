@@ -12,7 +12,9 @@ after the snapshot parquet landed but before the marker replaced —
 the widest window, since every earlier crash point is a strict subset of
 what the replay then redoes. "Restart" = a fresh sink object on the same
 base_dir (the recovery contract), redelivering the crashed batch id as
-foreachBatch would.
+foreachBatch would. The streamed-index restarts also tear the marker
+write itself (``Torn``): the temp file lands, the ``os.replace`` never
+runs.
 
 Plus the multi-process fence race: two real processes claiming one sink
 dir concurrently must resolve to exactly one owner; the loser's commit
@@ -48,6 +50,39 @@ def _arm_marker_crash(sink):
         return orig()
 
     sink._commit = crashing
+    return sink
+
+
+class Torn(int):
+    """A crash point: the batch id whose marker write dies between
+    ``write_json_atomic``'s temp file and its ``os.replace``, so the temp
+    file is on disk and the marker still holds the previous commit."""
+
+
+def _arm_crash(sink, crash_batch):
+    """Arm the crash ``crash_batch`` names on the sink's next commit:
+    a torn marker for a ``Torn`` id, else the ``_commit`` crash."""
+    if not isinstance(crash_batch, Torn):
+        return _arm_marker_crash(sink)
+    orig, marker = sink._commit, sink._marker_path()
+
+    def torn():
+        real = os.replace
+
+        def replace(src, dst):
+            if dst == marker:
+                assert os.path.exists(src)  # the temp file was written
+                raise _CrashInjected("died between marker temp file and replace")
+            return real(src, dst)
+
+        os.replace = replace
+        try:
+            orig()
+        finally:
+            os.replace = real
+            sink._commit = orig
+
+    sink._commit = torn
     return sink
 
 
@@ -141,7 +176,7 @@ def _run_postidx(spark, base_dir, crash_batch=None):
         if bid == crash_batch:
             # postings for bid have landed (they're written before the
             # stats fold); the crash fires inside the stats marker commit
-            _arm_marker_crash(sink.stats)
+            _arm_crash(sink.stats, crash_batch)
             with pytest.raises(_CrashInjected):
                 sink.write_batch(_docs(spark, rows), bid)
             sink = fresh()  # restart recovers the marker, bid redelivers
@@ -172,8 +207,8 @@ def _run_ivfidx(spark, base_dir, crash_batch=None):
     for bid, rows in enumerate(batches):
         if bid == crash_batch:
             # the corpus partition for bid has landed; the crash fires in
-            # the centroid-sum marker commit
-            _arm_marker_crash(sink.cent)
+            # the index marker commit that adds its centroid sums
+            _arm_crash(sink.stats, crash_batch)
             with pytest.raises(_CrashInjected):
                 sink.write_batch(spark.createDataFrame(rows, schema), bid)
             sink = fresh()
@@ -186,6 +221,7 @@ def _run_ivfidx(spark, base_dir, crash_batch=None):
 @pytest.mark.parametrize("crash_at", [
     0, pytest.param(1, marks=pytest.mark.slow),
     pytest.param(2, marks=pytest.mark.slow),
+    pytest.param(Torn(1), id="torn1"),
 ])
 def test_ivf_index_restart_mid_batch_exactly_once(spark, tmp_path, crash_at):
     """Streamed IVF index: a crash between the corpus append and the
@@ -265,6 +301,7 @@ def test_reader_handles_do_not_fence_the_index_writer(spark, tmp_path):
 @pytest.mark.parametrize("crash_at", [
     pytest.param(0, marks=pytest.mark.slow), 1,
     pytest.param(2, marks=pytest.mark.slow),
+    pytest.param(Torn(2), id="torn2", marks=pytest.mark.slow),
 ])
 def test_postings_index_restart_mid_batch_exactly_once(spark, tmp_path, crash_at):
     """dp25 streamed index: a crash between the postings write and the
@@ -336,7 +373,23 @@ def test_index_dirs_hold_one_commit_record(spark, tmp_path):
         vsink.write_batch(spark.createDataFrame(
             [(bid * 2 + i, [float(i), 1.0], i) for i in (1, 2)], schema), bid)
     assert vsink.store.folded_through() == 1
-    assert sorted(os.listdir(ivf)) == ["centsums", "corpus", "corpus_chunks"]
+    assert sorted(os.listdir(ivf)) == [
+        "_committed.json", "_writer.json", "corpus", "corpus_chunks"]
+    with open(os.path.join(ivf, "_committed.json")) as f:
+        assert len(json.load(f)["meta"]["stats"]) == 3
+
+
+def test_ivf_index_with_centsums_refuses_to_resume(tmp_path):
+    """An IVF directory that keeps its commit record under centsums/
+    (the earlier layout) is rebuilt, not resumed: a writer opened on it
+    raises instead of starting over beside the old corpus batches."""
+    from flinkrealtimedatawarehouse_spark.streaming.simsearch import IvfIndexSink
+
+    ivf = tmp_path / "ivf"
+    (ivf / "centsums").mkdir(parents=True)
+    with pytest.raises(ValueError, match="centsums"):
+        IvfIndexSink(str(ivf), "vec_id", "embedding", "label")
+    assert sorted(os.listdir(ivf)) == ["centsums"]
 
 
 def _run_scd2(spark, base_dir, crash_batch=None):

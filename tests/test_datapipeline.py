@@ -1507,36 +1507,83 @@ def test_streamed_indexes_answer_as_of_any_batch(spark, tmp_path):
         assert [tuple(r) for r in got] == [tuple(r) for r in expect], b
 
 
-def test_streamed_postings_vacuum_keeps_current_drops_as_of(spark, tmp_path):
-    """Vacuuming the index's stats snapshots (retention) must leave
+@pytest.mark.parametrize("index", ["postings", "ivf"])
+def test_streamed_postings_vacuum_keeps_current_drops_as_of(spark, tmp_path, index):
+    """Vacuuming a streamed index's totals (retention) must leave
     current-state search untouched while vacuumed as-of versions raise —
-    read_version's existing contract, proven on the index surface."""
+    read_version's existing contract, proven on the index surface, for
+    the postings and the IVF index. The IVF stream's last batch holds
+    only null and empty vectors: it advances the version and leaves the
+    centroids as they were (the postings twin of that case is the
+    empty-token batch in test_postings_observed_stats_match_second_pass)."""
     import pytest as _pytest
 
-    from flinkrealtimedatawarehouse_spark.streaming import searchindex
+    from flinkrealtimedatawarehouse_spark.datapipeline import similarity
     from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
         PostingsIndexSink,
         streamed_postings_search,
     )
+    from flinkrealtimedatawarehouse_spark.streaming.simsearch import (
+        IvfIndexSink,
+        streamed_ivf_topk,
+    )
 
-    rows = [(i, "alpha beta" if i % 2 else "gamma zeta") for i in range(1, 13)]
     base = str(tmp_path / "vidx")
-    sink = PostingsIndexSink(base, "doc_id", "text", n_buckets=4)
-    for bid in range(3):
-        sink.write_batch(_docs(spark, rows[bid * 4:(bid + 1) * 4]), bid)
+    if index == "postings":
+        rows = [(i, "alpha beta" if i % 2 else "gamma zeta") for i in range(1, 13)]
+        sink = PostingsIndexSink(base, "doc_id", "text", n_buckets=4)
+        for bid in range(3):
+            sink.write_batch(_docs(spark, rows[bid * 4:(bid + 1) * 4]), bid)
 
-    before = streamed_postings_search(spark, base, "doc_id", "alpha zeta", k=10).collect()
+        def search(as_of_batch=None):
+            return streamed_postings_search(
+                spark, base, "doc_id", "alpha zeta", k=10, as_of_batch=as_of_batch
+            ).collect()
+
+        def reopen():
+            return PostingsIndexSink(base, "doc_id", "text", n_buckets=4)
+    else:
+        schema = "vec_id long, embedding array<double>, label int"
+        rows = [(i, [float(i % 5) - 2, float(i % 3) - 1, 0.5], i % 2)
+                for i in range(1, 13)]
+        sink = IvfIndexSink(base, "vec_id", "embedding", "label")
+        for bid in range(2):
+            sink.write_batch(spark.createDataFrame(
+                rows[bid * 6:(bid + 1) * 6], schema), bid)
+        sink.write_batch(spark.createDataFrame(
+            [(13, None, 0), (14, [], 1), (15, None, 1)], schema), 2)
+        assert sink.stats.version == 2
+        cent = sorted(tuple(r) for r in sink.centroids(spark).collect())
+        assert cent == sorted(tuple(r) for r in sink.centroids(spark, 1).collect())
+        corpus = spark.createDataFrame(rows, schema).select(
+            F.col("label").alias("cell"),
+            similarity.quantized(F.col("embedding")).alias("qn"),
+        )
+        assert cent == sorted(
+            tuple(r) for r in similarity._cell_centroids(corpus).collect())
+        probes = spark.createDataFrame(rows[:2], schema)
+
+        def search(as_of_batch=None):
+            return streamed_ivf_topk(
+                spark, sink, probes, k=4, n_probe=2, as_of_batch=as_of_batch
+            ).collect()
+
+        def reopen():
+            return IvfIndexSink(base, "vec_id", "embedding", "label")
+
+    before = search()
+    assert before
     removed = sink.stats.vacuum(keep_last=1)
     assert removed  # something was actually reclaimed
-    after = streamed_postings_search(spark, base, "doc_id", "alpha zeta", k=10).collect()
+    after = search()
     assert [tuple(r) for r in after] == [tuple(r) for r in before]
     # a fresh handle (recovered from the marker) agrees post-vacuum
-    fresh = searchindex._stats_sink(base)
-    assert fresh.version == sink.stats.version
+    version = sink.stats.version
+    sink = reopen()
+    assert sink.stats.version == version
+    assert [tuple(r) for r in search()] == [tuple(r) for r in before]
     with _pytest.raises(ValueError):
-        streamed_postings_search(
-            spark, base, "doc_id", "alpha zeta", k=10, as_of_batch=0
-        )
+        search(as_of_batch=0)
 
 
 def test_zero_vector_cosine_is_defined_not_divide_by_zero(spark):

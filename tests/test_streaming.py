@@ -2271,8 +2271,14 @@ def test_tiered_read_repeated_part_vals_reads_each_row_once(spark, tmp_path):
     assert files and all("/bucket=1/" in f for f in files)  # still the pruned read
 
 
-@pytest.mark.slow
-def test_tiered_read_part_vals_equals_filtered_full_read(spark, tmp_path):
+@pytest.mark.parametrize("n_batches, compact_every, keep_recent, merges", [
+    # 3 minor folds, then a major merge of the first two chunks
+    pytest.param(7, 2, 1, 1, id="7batches"),
+    # 2 minor folds, no merge
+    pytest.param(12, 4, 2, 0, id="12batches", marks=pytest.mark.slow),
+])
+def test_tiered_read_part_vals_equals_filtered_full_read(
+        spark, tmp_path, n_batches, compact_every, keep_recent, merges):
     """Round 15 (guide §6): pruned tiered reads are CONSTRUCTED from the
     selected partition-value directories (explicit paths + basePath)
     instead of listing the whole batch=/bucket= tree and filtering. The
@@ -2287,13 +2293,13 @@ def test_tiered_read_part_vals_equals_filtered_full_read(spark, tmp_path):
 
     random.seed(43)
     vocab = ["alpha", "beta", "gamma", "delta", "zeta", "omega"]
-    n_batches, per_batch = 12, 3
+    per_batch = 3
     rows = [(i, " ".join(random.choices(vocab, k=6)))
             for i in range(n_batches * per_batch)]
     idx = str(tmp_path / "pvals")
     sink = PostingsIndexSink(
         idx, "doc_id", "text", n_buckets=8,
-        compact_every=4, keep_recent=2, max_chunks=2,
+        compact_every=compact_every, keep_recent=keep_recent, max_chunks=2,
     )
     for bid in range(n_batches):
         sink.write_batch(
@@ -2301,6 +2307,10 @@ def test_tiered_read_part_vals_equals_filtered_full_read(spark, tmp_path):
         )
     store = sink.store
     assert store.folded_through() >= 0  # compaction really ran
+    # a minor fold writes a chunk of compact_every batches, a major merge
+    # one of more
+    chunks = store._load()["chunks"]
+    assert sum(c["n_batches"] > compact_every for c in chunks) == merges
     all_buckets = sorted(
         r.bucket for r in store.read(spark).select("bucket").distinct().collect()
     )
