@@ -183,29 +183,6 @@ def parquet_stream(
     )
 
 
-class _stream_shuffle_partitions:
-    """Scope a lower shuffle-partition count to one replay run.
-
-    A stateful streaming query pays a state-store commit per shuffle
-    partition per micro-batch; at replay-harness scale (a few thousand
-    rows over ~6 micro-batches) 32 partitions is pure overhead — the
-    per-query state partition count is fixed from the FIRST batch of a
-    checkpoint, and our checkpoints are fresh per run, so narrowing the
-    setting here is safe and local. On a real cluster you would size this
-    to executor count × cores instead; the operators themselves don't care.
-    """
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
 class scoped_conf:
     """Scope session-conf overrides to one replay run: set before the
     stream starts (Spark consults streaming confs at start), restored to
@@ -232,19 +209,31 @@ class scoped_conf:
                 self.spark.conf.set(k, v)
 
 
+def _stream_confs(spark: SparkSession, overrides: dict | None = None) -> dict:
+    """The session confs a replay run starts its query under: one wave of
+    state tasks per micro-batch. A stateful batch runs one state-store
+    task (and one checkpoint commit) per shuffle partition, so the count
+    is the live session's cores, capped at 8 (the count the replay runs
+    were tuned with, so a box with >= 8 cores runs as tuned). A restarted
+    query keeps the count pinned in its checkpoint's offset log.
+    ``overrides`` win over it."""
+    n = min(8, spark.sparkContext.defaultParallelism)
+    return {"spark.sql.shuffle.partitions": str(n), **(overrides or {})}
+
+
 def run_to_memory(
     sdf: DataFrame,
     tag: str,
     output_mode: str = "append",
-    shuffle_partitions: int = 8,
     conf_overrides: dict | None = None,
 ) -> DataFrame:
     """Run a streaming DF to completion into a memory sink; return the
-    sink table as a batch DataFrame. Checkpointing on (T9)."""
+    sink table as a batch DataFrame. Checkpointing on (T9). The query
+    starts under ``_stream_confs``: min(8, cores) shuffle and state
+    partitions, then ``conf_overrides``."""
     name = f"sink_{tag}_{os.getpid()}_{next(_counter)}"
-    with _stream_shuffle_partitions(sdf.sparkSession, shuffle_partitions), scoped_conf(
-        sdf.sparkSession, conf_overrides
-    ):
+    spark = sdf.sparkSession
+    with scoped_conf(spark, _stream_confs(spark, conf_overrides)):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -255,7 +244,7 @@ def run_to_memory(
         )
         q.awaitTermination()
         _capture_progress(q)
-    return sdf.sparkSession.table(name)
+    return spark.table(name)
 
 
 def _capture_progress(q) -> None:
@@ -297,15 +286,12 @@ def observed(name: str) -> list[dict]:
     return out
 
 
-def run_foreach_batch(
-    sdf: DataFrame,
-    batch_fn,
-    tag: str,
-    shuffle_partitions: int = 8,
-) -> None:
+def run_foreach_batch(sdf: DataFrame, batch_fn, tag: str) -> None:
     """Run a streaming DF to completion through a foreachBatch writer
-    (the K2/K3/K4 sink shapes). Checkpointing on."""
-    with _stream_shuffle_partitions(sdf.sparkSession, shuffle_partitions):
+    (the K2/K3/K4 sink shapes). Checkpointing on; the query starts under
+    ``_stream_confs`` (min(8, cores) shuffle partitions), which the batch
+    function's own shuffles inherit."""
+    with scoped_conf(sdf.sparkSession, _stream_confs(sdf.sparkSession)):
         q = (
             sdf.writeStream.foreachBatch(batch_fn)
             .option("checkpointLocation", scratch_dir(f"ckpt_{tag}"))

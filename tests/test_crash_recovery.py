@@ -340,6 +340,57 @@ def test_postings_search_reads_one_commit_after_a_crash_mid_batch(spark, tmp_pat
     assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
 
+
+def test_streamed_search_loads_the_index_marker_once(spark, tmp_path, monkeypatch):
+    """One streamed search reads its index marker once: the totals, the
+    horizon and the compaction state its corpus read follows come from
+    that one load. Both indexes have folded batches 0-1 into a chunk, so
+    each corpus read follows the marker's chunk list."""
+    from flinkrealtimedatawarehouse_spark.streaming import snapshots
+    from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
+        PostingsIndexSink,
+        streamed_postings_search,
+    )
+    from flinkrealtimedatawarehouse_spark.streaming.simsearch import (
+        IvfIndexSink,
+        streamed_ivf_topk,
+    )
+
+    post, ivf = str(tmp_path / "post"), str(tmp_path / "ivf")
+    psink = PostingsIndexSink(post, "doc_id", "text", n_buckets=4,
+                              compact_every=2, keep_recent=1)
+    for bid, rows in enumerate([B0, B1, B2]):
+        psink.write_batch(_docs(spark, rows), bid)
+    schema = "vec_id long, embedding array<double>, label int"
+    vecs = [(i, [float(i % 3), 1.0], i % 2) for i in range(1, 7)]
+    vsink = IvfIndexSink(ivf, "vec_id", "embedding", "label",
+                         compact_every=2, keep_recent=1)
+    for bid in range(3):
+        vsink.write_batch(spark.createDataFrame(vecs[2 * bid:2 * bid + 2], schema), bid)
+    assert psink.store.folded_through() == vsink.store.folded_through() == 1
+    reader = IvfIndexSink(ivf, "vec_id", "embedding", "label", read_only=True)
+
+    loads = []
+
+    def counting_open(path, mode="r", *a, **kw):
+        if os.path.basename(path) == "_committed.json" and "r" in mode:
+            loads.append(os.path.dirname(path))
+        return open(path, mode, *a, **kw)
+
+    # snapshots' own open: the marker's one reader (refresh) lives there
+    monkeypatch.setattr(snapshots, "open", counting_open, raising=False)
+    for as_of in (None, 1):
+        loads.clear()
+        hits = streamed_postings_search(spark, post, "doc_id", "quick fox",
+                                        k=5, as_of_batch=as_of).collect()
+        assert hits and loads == [post]
+        loads.clear()
+        probes = spark.createDataFrame(vecs[:2], schema)
+        top = streamed_ivf_topk(spark, reader, probes, k=3, n_probe=1,
+                                as_of_batch=as_of).collect()
+        assert top and loads == [ivf]
+
+
 def test_index_dirs_hold_one_commit_record(spark, tmp_path):
     """Each streamed index commits through its owning sink's marker
     alone: layout, compaction state and (postings) corpus totals live in
@@ -692,9 +743,7 @@ def _run_chain(spark, in_dir, work_dir, crash_batch=None):
         chain = state.bounce_stats_stream(
             sdf, gap_s=10, delay="1 second", duration="1 minute"
         )
-        with runner._stream_shuffle_partitions(spark, 8), runner.scoped_conf(
-            spark, state.CHAIN_STREAM_CONFS
-        ):
+        with runner.scoped_conf(spark, state.CHAIN_STREAM_CONFS):
             q = (
                 chain.writeStream.foreachBatch(batch_fn)
                 .option("checkpointLocation", ckpt)

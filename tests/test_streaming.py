@@ -112,6 +112,92 @@ def test_stream_dedup_state_evicts_old_grains(spark):
     assert state_rows and state_rows[0] <= n_users * 4
 
 
+def _state_partitions(progress) -> set[tuple[int, int]]:
+    """(numShufflePartitions, numStateStoreInstances) of every stateful
+    operator in a run's progress reports."""
+    return {(op["numShufflePartitions"], op["numStateStoreInstances"])
+            for p in progress for op in p["stateOperators"]}
+
+
+def _dedup_days(sdf):
+    keyed = sdf.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
+    return state.streaming_dedup(keyed, ["user_id", "event_date"])
+
+
+def _dedup_rows(n_users=6, n_days=3, per_day=4):
+    return [
+        (u, (d * per_day + h) * n_users + u,
+         ts(f"2024-01-{d + 1:02d} {h * 6:02d}:00:00"), "view", 0.0, None)
+        for d in range(n_days) for h in range(per_day) for u in range(n_users)
+    ]
+
+
+def test_stream_state_partitions_are_one_wave_of_cores(spark):
+    """A fresh stateful replay query runs one wave of state tasks per
+    micro-batch: min(8, cores) shuffle and state-store partitions,
+    whatever the session's own shuffle-partition count, which the run
+    leaves as it found it."""
+    want = min(8, spark.sparkContext.defaultParallelism)
+    other = str(want + 1)
+    with runner.scoped_conf(spark, {"spark.sql.shuffle.partitions": other}):
+        sdf = _stream_events(spark, _dedup_rows(), 2, "dedup_wave")
+        out = runner.run_to_memory(_dedup_days(sdf), "dedup_wave")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == other
+    assert out.count() == 6 * 3
+    assert _state_partitions(runner.LAST_PROGRESS) == {(want, want)}
+
+
+def test_stream_checkpoint_resumes_with_its_state_partitions(spark, monkeypatch):
+    """A checkpoint started under 8 state partitions resumes with 8 under
+    the min(8, cores) default: Spark restores the count from the offset
+    log. The first run sees two of four time slices and the restart the
+    rest; day 2 spans the cut, so the restored state must drop its
+    repeats. Together the two runs emit exactly what one uninterrupted
+    run does."""
+    import glob
+    import json
+    import os
+    import shutil
+
+    df = spark.createDataFrame(
+        _dedup_rows(),
+        "user_id long, event_id long, ts timestamp, event_type string, value double, props string",
+    )
+    staged = runner.stage_stream_dir(df, "ts", 4, "resume")
+    files = sorted(glob.glob(os.path.join(staged, "part-*.parquet")))
+    live = runner.scratch_dir("in_resume_live")
+    # both runs of tag "resume" share one checkpoint
+    ckpt, make = runner.scratch_dir("ckpt_resume"), runner.scratch_dir
+    monkeypatch.setattr(runner, "scratch_dir", lambda tag, fresh=True: (
+        ckpt if tag == "ckpt_resume" else make(tag, fresh)))
+
+    def run(in_dir, tag):
+        got = []
+        runner.run_foreach_batch(
+            _dedup_days(runner.parquet_stream(spark, in_dir, df.schema)),
+            lambda batch, bid: got.extend(tuple(r) for r in batch.collect()), tag)
+        return got, _state_partitions(runner.LAST_PROGRESS)
+
+    for f in files[:2]:
+        shutil.copy2(f, live)  # copy2 keeps the staged, ordered mtimes
+    first = []
+    with runner.scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        q = (_dedup_days(runner.parquet_stream(spark, live, df.schema)).writeStream
+             .foreachBatch(lambda batch, bid: first.extend(tuple(r) for r in batch.collect()))
+             .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
+        q.awaitTermination()
+    assert _state_partitions(json.loads(p.json) for p in q.recentProgress) == {(8, 8)}
+    for f in files[2:]:
+        shutil.copy2(f, live)
+    second, parts = run(live, "resume")
+    assert parts == {(8, 8)}
+    whole, parts = run(staged, "resume_whole")
+    assert parts == {(min(8, spark.sparkContext.defaultParallelism),) * 2}
+    assert first and second
+    assert sorted(first + second) == sorted(whole)
+    assert len(whole) == len(set(whole)) == 6 * 3
+
+
 def test_fanout_sink_routes_by_column(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)], "id long, sink_table string, v double"
