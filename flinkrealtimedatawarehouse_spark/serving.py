@@ -305,43 +305,37 @@ def stream_wide_product_upkeep(spark: SparkSession, sf_dir: str, out_dir: str,
     )
 
     def _enrich_and_fold(batch, bid):
-        # two actions read the batch (the bounds pass and the fold's
-        # join): batch-scoped persist, so the source is scanned once
-        batch.persist()
-        try:
-            # Range-prune the orders lookup side to the batch's own key span
-            # (round 14): micro-batches are time/key-local
-            # (the staged feed slices by l_orderkey; a real CDC feed is
-            # time-ordered), so o_orderkey BETWEEN min/max of the batch is a
-            # pushed-down parquet predicate that skips the row groups no row
-            # of this batch can match — the join is INNER on equality, so
-            # rows outside the batch's span can never survive it and the
-            # filter is result-identical. The bounds pass also fills the
-            # batch's cache; on an arbitrary-keyed (non-local) feed the
-            # bounds cover everything and the filter is harmless. Without
-            # this, every micro-batch re-scanned and re-shuffled the FULL
-            # orders side (measured at sf1: ~3 s of the ~7 s per batch).
-            lo, hi = batch.agg(
-                F.min("l_orderkey"), F.max("l_orderkey")
-            ).first()
-            odim = orders if lo is None else orders.filter(
-                F.col("o_orderkey").between(F.lit(lo), F.lit(hi))
-            )
-            # A micro-batch arrives as ONE single-row-group file — unsplittable,
-            # so without this the whole enrich+partial-agg map side runs in one
-            # task (measured at sf1: ~2.5 s single-threaded per batch while 31
-            # cores idle). Hash-repartitioning the batch on the join key costs
-            # one small exchange of the raw batch (~14 MB) and fans the joins +
-            # partial aggregation across the cluster; on a real Kafka feed the
-            # source is topic-partitioned and this exchange does not exist.
-            keyed = batch.repartition(F.col("l_orderkey"))
-            enriched = (
-                keyed.join(F.broadcast(part), keyed["l_partkey"] == part["p_partkey"], "inner")
-                .join(odim, keyed["l_orderkey"] == odim["o_orderkey"], "inner")
-            )
-            sink.write_batch(enriched, bid)
-        finally:
-            batch.unpersist()
+        # Range-prune the orders lookup side to the batch's own key span
+        # (round 14, guide §3.2/§8): micro-batches are time/key-local
+        # (the staged feed slices by l_orderkey; a real CDC feed is
+        # time-ordered), so o_orderkey BETWEEN min/max of the batch is a
+        # pushed-down parquet predicate that skips the row groups no row
+        # of this batch can match — the join is INNER on equality, so
+        # rows outside the batch's span can never survive it and the
+        # filter is result-identical. The bounds pass reads ONE column
+        # of the batch; on an arbitrary-keyed (non-local) feed the
+        # bounds cover everything and the filter is harmless. Without
+        # this, every micro-batch re-scanned and re-shuffled the FULL
+        # orders side (measured at sf1: ~3 s of the ~7 s per batch).
+        lo, hi = batch.agg(
+            F.min("l_orderkey"), F.max("l_orderkey")
+        ).first()
+        odim = orders if lo is None else orders.filter(
+            F.col("o_orderkey").between(F.lit(lo), F.lit(hi))
+        )
+        # A micro-batch arrives as ONE single-row-group file — unsplittable,
+        # so without this the whole enrich+partial-agg map side runs in one
+        # task (measured at sf1: ~2.5 s single-threaded per batch while 31
+        # cores idle). Hash-repartitioning the batch on the join key costs
+        # one small exchange of the raw batch (~14 MB) and fans the joins +
+        # partial aggregation across the cluster; on a real Kafka feed the
+        # source is topic-partitioned and this exchange does not exist.
+        batch = batch.repartition(F.col("l_orderkey"))
+        enriched = (
+            batch.join(F.broadcast(part), batch["l_partkey"] == part["p_partkey"], "inner")
+            .join(odim, batch["l_orderkey"] == odim["o_orderkey"], "inner")
+        )
+        sink.write_batch(enriched, bid)
 
     runner.run_foreach_batch(sdf, _enrich_and_fold, tag)
     return sink

@@ -11,8 +11,8 @@ version's and committed in the index's one marker, an ``IndexCommit``
 at the index root. The index supplies only its row and totals
 functions; the replay guard, persist, partition write, commit and
 compaction order is shared. A search reads one commit
-(``IndexCommit.read_commit``): the totals, the corpus horizon and the
-compaction state its corpus read follows come from one marker load.
+(``IndexCommit.read_commit``): the totals and the corpus horizon come
+from one marker load.
 
 Tiered compaction. The append-only layout's measured cost (SCALE.md
 round 10): at only 32 batches x 64 buckets the
@@ -121,8 +121,8 @@ class TieredAppendStore:
 
     # --- state -------------------------------------------------------------
 
-    def _load(self, reload: bool = True) -> dict:
-        if reload and self.owner.read_only:
+    def _load(self) -> dict:
+        if self.owner.read_only:
             self.owner.refresh()
         return copy.deepcopy(self.owner.meta.get("compaction", self._EMPTY))
 
@@ -161,7 +161,7 @@ class TieredAppendStore:
     # --- read path -----------------------------------------------------------
 
     def read(self, spark: SparkSession, as_of_batch: int | None = None,
-             part_vals: list | None = None, reload: bool = True) -> DataFrame:
+             part_vals: list | None = None) -> DataFrame:
         """All index rows (chunks + tail), with ``batch`` present as a
         column either way. ``as_of_batch`` prunes chunks wholly above the
         horizon at the MARKER level (no listing, no plan node) and
@@ -179,13 +179,8 @@ class TieredAppendStore:
         per-read listing was the measured stream-vs-batch read premium
         (r14: post_stream_single 1.59x its batch twin at sf1); the
         existence probes here are driver-local ``os.path.isdir`` calls —
-        the same filesystem the marker lives on.
-
-        ``reload=False`` reads the compaction state of the owner's last
-        marker load instead of re-reading the marker: a search that just
-        read its commit (``IndexCommit.read_commit``) takes the horizon
-        and the chunk list from that one load."""
-        st = self._load(reload)  # read handles must see new compactions
+        the same filesystem the marker lives on."""
+        st = self._load()  # fresh: read handles must see new compactions
         ft = st["folded_through"]
         # deduped in order: a repeated value would count its leaves twice
         # towards _MAX_ROOTS_PER_READ and push the read onto the listed one
@@ -241,7 +236,7 @@ class TieredAppendStore:
                 # no matching partition dir anywhere: fall back to the
                 # generic read so schema/raise semantics stay identical
                 # (rare — a query whose term buckets hold no postings)
-                return self.read(spark, as_of_batch, reload=False).filter(
+                return self.read(spark, as_of_batch).filter(
                     F.col(self.part_col).isin(sel)
                 )
             raise ValueError(f"append index at {self.tail_dir} has no data")
@@ -381,14 +376,12 @@ class IndexCommit(VersionedSnapshotSink):
     def read_version(self, spark: SparkSession, version: int) -> DataFrame:
         return self.frame(spark, self.totals(version))
 
-    def read_commit(self, as_of_batch: int | None = None, reload: bool = True):
+    def read_commit(self, as_of_batch: int | None = None):
         """``(totals, horizon)`` of one marker load: the current totals
         and ``last_bid``, or those as of ``as_of_batch``. A read handle
         re-reads the marker first, so it sees the writer's later
-        commits; rows past the horizon belong to no commit it read.
-        ``reload=False``: a handle opened for this one read takes the
-        load its constructor made."""
-        if reload and self.read_only:
+        commits; rows past the horizon belong to no commit it read."""
+        if self.read_only:
             self.refresh()
         if self.version < 0:
             raise ValueError(f"streamed index at {self.base_dir} has no committed batches")

@@ -243,15 +243,14 @@ def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
     """Shared read path for single- and multi-query streamed search:
     (pruned+filtered postings rows with df, 1-row (n_docs, avgdl) frame).
     df is NOT stored in the streamed layout: it is window-counted over
-    these rows. The totals, the bucket modulus, the postings horizon and
-    the compaction state come from one marker load (the read handle's
-    own), so the search reads one commit: postings of a batch whose
-    commit has not landed are outside the horizon.
+    these rows. The totals, the bucket modulus and the postings horizon
+    come from one marker load, so the search reads one commit: postings
+    of a batch whose commit has not landed are outside the horizon.
     Reads go through the tiered store: chunk + tail union once
     auto-compaction has run, a plain directory read (identical to the
     pre-compaction plan) before it."""
     marker = _stats_sink(out_dir, read_only=True)
-    (n_docs, sum_dl), horizon = marker.read_commit(as_of_batch, reload=False)
+    (n_docs, sum_dl), horizon = marker.read_commit(as_of_batch)
     stats = spark.createDataFrame(
         [(float(n_docs), sum_dl / n_docs if n_docs else None)],
         "n_docs double, avgdl double",
@@ -262,8 +261,7 @@ def _streamed_index_rows(spark: SparkSession, out_dir: str, terms: list[str],
     # batch= / bucket= tree and pruning after — identical rows, the
     # per-read listing premium removed
     rows = (
-        _postings_store(out_dir, marker)
-        .read(spark, horizon, part_vals=buckets, reload=False)
+        _postings_store(out_dir, marker).read(spark, horizon, part_vals=buckets)
         .filter(F.col("term").isin(terms))
     )
     df = F.count(F.lit(1)).over(Window.partitionBy("term"))

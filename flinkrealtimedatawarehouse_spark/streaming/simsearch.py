@@ -267,9 +267,9 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     predicate, not data movement).
 
     One commit per search: a read handle re-reads the marker once, and
-    the centroids, the corpus horizon (its ``last_bid``) and the chunk
-    list of the corpus read all come from that load, so cells are never
-    ranked by older centroids than the corpus they select from."""
+    the centroids and the corpus horizon (its ``last_bid``) both come
+    from that load, so cells are never ranked by older centroids than
+    the corpus they select from."""
     probe_q = probes.select(
         F.col(sink.id_col).alias("probe_id"),
         similarity.quantized(F.col(sink.vec_col), sink.quant).alias("qp"),
@@ -286,7 +286,7 @@ def streamed_ivf_topk(spark: SparkSession, sink: IvfIndexSink,
     # part_vals constructs the scan from the probed cells' own partition
     # directories (round 15, guide §6) — identical rows to the old
     # read().filter(isin), without listing every unprobed cell dir
-    corpus = sink.store.read(spark, horizon, part_vals=cells, reload=False)
+    corpus = sink.store.read(spark, horizon, part_vals=cells)
     if corpus_filter is not None:
         corpus = corpus.filter(corpus_filter)
     return similarity._cell_rerank(corpus, probe_cells, k)

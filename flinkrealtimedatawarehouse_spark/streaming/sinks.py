@@ -184,41 +184,35 @@ class Scd2HistorySink(PartitionedSnapshotStore):
                 f"expected {self.version} (as-of reads require one "
                 "committed version per consecutive batch id)"
             )
-        # two actions read the batch (the touched keys and the re-stamp
-        # union): batch-scoped persist, so the source is scanned once
-        batch.persist()
-        try:
-            spark = batch.sparkSession
-            affected = batch.select(self.pk).distinct()
-            # Semi-join the RAW runs to the touched keys BEFORE the
-            # group-latest merge window (round 14): the previous
-            # shape was current() -> semi-join, which shuffled the FULL state
-            # through the per-key window every batch — the per-batch
-            # O(|state|) exchange class the other partstore sinks already
-            # eliminated. The window filter commutes with the key-level semi
-            # join (a key's rows are complete either way), so the merged view
-            # of the touched keys is identical; the window exchange now
-            # carries only the touched keys' interval rows. Deliberately NOT
-            # pids_of-pruned (unlike the neardup/cluster sinks): dim-change
-            # batches are arbitrary-keyed, so the directory pruning rarely
-            # bites while its collect adds an eager extra pass over the batch
-            # keys per commit (measured: +9 s on a 5M-key initial load, no
-            # sparse-batch win at any state size measured on one node).
-            touched_raw = self._read(spark, self.version, merged=False).join(
-                affected, self.pk, "left_semi"
-            )
-            touched_changes = self.merge_fn(touched_raw).drop("_sv").drop(
-                "valid_from", "valid_to", "is_current"
-            )
-            restamped = self._stamp(
-                touched_changes.unionByName(batch, allowMissingColumns=True)
-            )
-            # delta = the touched keys' complete NEW interval row-set; the
-            # store's group-latest merge retires their previous rows on read,
-            # untouched keys' rows ride along from their own last commit
-            self.commit_batch(restamped, batch_id)
-        finally:
-            batch.unpersist()
+        spark = batch.sparkSession
+        affected = batch.select(self.pk).distinct()
+        # Semi-join the RAW runs to the touched keys BEFORE the
+        # group-latest merge window (round 14, guide §2.3): the previous
+        # shape was current() -> semi-join, which shuffled the FULL state
+        # through the per-key window every batch — the per-batch
+        # O(|state|) exchange class the other partstore sinks already
+        # eliminated. The window filter commutes with the key-level semi
+        # join (a key's rows are complete either way), so the merged view
+        # of the touched keys is identical; the window exchange now
+        # carries only the touched keys' interval rows. Deliberately NOT
+        # pids_of-pruned (unlike the neardup/cluster sinks): dim-change
+        # batches are arbitrary-keyed, so the directory pruning rarely
+        # bites while its collect adds an eager extra pass over the batch
+        # keys per commit (measured: +9 s on a 5M-key initial load, no
+        # sparse-batch win at any state size this sandbox reaches).
+        touched_raw = self._read(spark, self.version, merged=False).join(
+            affected, self.pk, "left_semi"
+        )
+        touched_changes = self.merge_fn(touched_raw).drop("_sv").drop(
+            "valid_from", "valid_to", "is_current"
+        )
+        restamped = self._stamp(
+            touched_changes.unionByName(batch, allowMissingColumns=True)
+        )
+        # delta = the touched keys' complete NEW interval row-set; the
+        # store's group-latest merge retires their previous rows on read,
+        # untouched keys' rows ride along from their own last commit
+        self.commit_batch(restamped, batch_id)
 
     def history(self, spark: SparkSession,
                 as_of_batch: int | None = None) -> DataFrame:

@@ -340,13 +340,14 @@ def test_postings_search_reads_one_commit_after_a_crash_mid_batch(spark, tmp_pat
     assert [tuple(r) for r in got] == [tuple(r) for r in expect]
 
 
-
-def test_streamed_search_loads_the_index_marker_once(spark, tmp_path, monkeypatch):
-    """One streamed search reads its index marker once: the totals, the
-    horizon and the compaction state its corpus read follows come from
-    that one load. Both indexes have folded batches 0-1 into a chunk, so
-    each corpus read follows the marker's chunk list."""
-    from flinkrealtimedatawarehouse_spark.streaming import snapshots
+def test_streamed_search_sees_a_fold_committed_after_its_commit_read(
+        spark, tmp_path, monkeypatch):
+    """A writer folds batches 0-1 into a chunk (and deletes their tail
+    dirs) between a search's commit read and its corpus read. The search
+    keeps the horizon of the commit it read, and its corpus read follows
+    the chunk list the fold committed, so it answers exactly as it did
+    before the fold: no row of batches 0-1 goes missing."""
+    from flinkrealtimedatawarehouse_spark.streaming.compaction import IndexCommit
     from flinkrealtimedatawarehouse_spark.streaming.searchindex import (
         PostingsIndexSink,
         streamed_postings_search,
@@ -359,36 +360,46 @@ def test_streamed_search_loads_the_index_marker_once(spark, tmp_path, monkeypatc
     post, ivf = str(tmp_path / "post"), str(tmp_path / "ivf")
     psink = PostingsIndexSink(post, "doc_id", "text", n_buckets=4,
                               compact_every=2, keep_recent=1)
-    for bid, rows in enumerate([B0, B1, B2]):
-        psink.write_batch(_docs(spark, rows), bid)
     schema = "vec_id long, embedding array<double>, label int"
     vecs = [(i, [float(i % 3), 1.0], i % 2) for i in range(1, 7)]
     vsink = IvfIndexSink(ivf, "vec_id", "embedding", "label",
                          compact_every=2, keep_recent=1)
-    for bid in range(3):
+    for bid, rows in enumerate([B0, B1]):
+        psink.write_batch(_docs(spark, rows), bid)
         vsink.write_batch(spark.createDataFrame(vecs[2 * bid:2 * bid + 2], schema), bid)
-    assert psink.store.folded_through() == vsink.store.folded_through() == 1
+    # batch 2 trips the fold of batches 0-1; it lands right after the
+    # next read handle's commit read returns
+    fold = []
+    read_commit = IndexCommit.read_commit
+
+    def racing_read_commit(self, as_of_batch=None):
+        got = read_commit(self, as_of_batch)
+        if self.read_only and fold:
+            fold.pop()()
+        return got
+
+    monkeypatch.setattr(IndexCommit, "read_commit", racing_read_commit)
+
+    def search_post():
+        return streamed_postings_search(spark, post, "doc_id", "quick fox", k=5).collect()
+
+    pinned = search_post()
+    assert pinned and psink.store.folded_through() == -1
+    fold.append(lambda: psink.write_batch(_docs(spark, B2), 2))
+    assert search_post() == pinned
+    assert psink.store.folded_through() == 1 and not fold
+
     reader = IvfIndexSink(ivf, "vec_id", "embedding", "label", read_only=True)
+    probes = spark.createDataFrame(vecs[:2], schema)
 
-    loads = []
+    def search_ivf():
+        return streamed_ivf_topk(spark, reader, probes, k=3, n_probe=1).collect()
 
-    def counting_open(path, mode="r", *a, **kw):
-        if os.path.basename(path) == "_committed.json" and "r" in mode:
-            loads.append(os.path.dirname(path))
-        return open(path, mode, *a, **kw)
-
-    # snapshots' own open: the marker's one reader (refresh) lives there
-    monkeypatch.setattr(snapshots, "open", counting_open, raising=False)
-    for as_of in (None, 1):
-        loads.clear()
-        hits = streamed_postings_search(spark, post, "doc_id", "quick fox",
-                                        k=5, as_of_batch=as_of).collect()
-        assert hits and loads == [post]
-        loads.clear()
-        probes = spark.createDataFrame(vecs[:2], schema)
-        top = streamed_ivf_topk(spark, reader, probes, k=3, n_probe=1,
-                                as_of_batch=as_of).collect()
-        assert top and loads == [ivf]
+    pinned = search_ivf()
+    assert pinned and vsink.store.folded_through() == -1
+    fold.append(lambda: vsink.write_batch(spark.createDataFrame(vecs[4:], schema), 2))
+    assert search_ivf() == pinned
+    assert vsink.store.folded_through() == 1 and not fold
 
 
 def test_index_dirs_hold_one_commit_record(spark, tmp_path):
