@@ -14,9 +14,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Driver heap bounds in MiB: the derived default never exceeds the heap the
-# engine was tuned with (round 14) and never drops below what a session
-# needs to start.
+# Driver heap sizing in MiB: the derived default is HEAP_PER_CORE_MB per
+# session core, so 32 cores get exactly the heap the engine was tuned with
+# (round 14, HEAP_CAP_MB); it never exceeds that and never drops below what
+# a session needs to start.
+HEAP_PER_CORE_MB = 512
 HEAP_CAP_MB = 16 * 1024
 HEAP_FLOOR_MB = 1024
 
@@ -42,19 +44,23 @@ def available_memory_bytes() -> int:
     return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
 
-def driver_memory(available_bytes: int | None = None) -> str:
+def driver_memory(available_bytes: int | None = None, cpus: int | None = None) -> str:
     """Driver heap size as a JVM size string.
 
-    ``SPARK_DRIVER_MEMORY`` verbatim when set; else half of the available
-    memory, capped at ``HEAP_CAP_MB`` and floored at ``HEAP_FLOOR_MB``.
+    ``SPARK_DRIVER_MEMORY`` verbatim when set; else ``HEAP_PER_CORE_MB`` per
+    core (``default_cpus()`` unless given), capped at half of the available
+    memory and at ``HEAP_CAP_MB``, and floored at ``HEAP_FLOOR_MB``.
     """
     override = os.environ.get("SPARK_DRIVER_MEMORY")
     if override:
         return override
     if available_bytes is None:
         available_bytes = available_memory_bytes()
+    if cpus is None:
+        cpus = default_cpus()
     half_mb = available_bytes // 2 // (1024 * 1024)
-    return f"{min(HEAP_CAP_MB, max(HEAP_FLOOR_MB, half_mb))}m"
+    heap_mb = min(cpus * HEAP_PER_CORE_MB, half_mb, HEAP_CAP_MB)
+    return f"{max(HEAP_FLOOR_MB, heap_mb)}m"
 
 
 def get_spark(
@@ -84,14 +90,21 @@ def get_spark(
     # from every timed window), after which TLAB allocation never re-enters
     # the kernel: the same cold run drops 214 s -> 4 s and steady-state sys
     # time drops to ~2 s.
-    # Size: because the heap is committed up front, it must fit the box.
-    # The default is half of MemAvailable, capped at 16g (the round-14
-    # value, so any box with >= 32 GB available runs exactly as tuned) and
-    # floored at 1g; the other half holds the JVM's off-heap (metaspace,
-    # code cache, Netty/Arrow buffers), one Python worker per core and the
-    # Python driver. SPARK_DRIVER_MEMORY overrides the size verbatim; -Xms
-    # tracks it.
-    driver_mem = driver_memory()
+    # Size: the heap follows the work, not the box. Every byte of it is
+    # committed up front and counts in the process's RSS whether a task
+    # uses it or not, so the default is 512 MB per session core: 2g at 4
+    # cores, and 16g at 32 cores, the round-14 value, so a >= 32-core box
+    # with >= 32 GB available runs exactly as tuned. It is capped at half of
+    # MemAvailable, leaving the other half for the JVM's off-heap
+    # (metaspace, code cache, Netty/Arrow buffers), one Python worker per
+    # core, the Python driver and any child JVM the process starts (the
+    # fence-race test's racers run at 2 cores, so 1g each). Floored at 1g.
+    # Measured at 4 cores / 15.7 GiB against half of MemAvailable (~7.7g):
+    # peak RSS -66 to -68 % on every warebench workload, batch and read
+    # latencies flat, session start ~1 s faster, a few more young-GC
+    # pauses and no full GC. SPARK_DRIVER_MEMORY overrides the size
+    # verbatim; -Xms tracks it.
+    driver_mem = driver_memory(cpus=cpus)
     jvm_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch " + os.environ.get(
         "SPARK_GRAFT_JVM_OPTS", ""
     )

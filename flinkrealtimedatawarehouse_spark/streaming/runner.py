@@ -8,9 +8,15 @@ monotonically and no row is late-dropped — the streaming query's output
 becomes a deterministic function of the data and the watermark delay.
 
 ``run_to_memory`` executes any streaming DataFrame to completion with
-``trigger(availableNow=True)``, checkpointing enabled (the reference
-comments its checkpointing out — rt/app/dwd/BaseLogApp.java:28-34; we
-do better), and returns the accumulated sink contents as a batch DF.
+``trigger(availableNow=True)`` and returns the accumulated sink contents
+as a batch DF. Both run paths give each query its own checkpoint under
+``.scratch/``, but only ``run_foreach_batch`` is served by it: its
+sinks commit exactly once per batch id the checkpoint records, and a
+``foreachBatch`` query restarted on the same location resumes from it
+(the reference comments its checkpointing out —
+rt/app/dwd/BaseLogApp.java:28-34). A ``run_to_memory`` query cannot
+resume: Spark's memory sink refuses to restart from a checkpoint
+(``AnalysisException``).
 """
 
 from __future__ import annotations

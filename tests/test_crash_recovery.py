@@ -521,7 +521,6 @@ def _fence_racer(base_dir, barrier, results, idx):
         results[idx] = "error: " + traceback.format_exc()
 
 
-@pytest.mark.slow
 def test_concurrent_writer_fence_race_two_processes(spark, tmp_path):
     """Two real processes race commit_snapshot on one base_dir: exactly
     one must win; the other must raise the fencing RuntimeError; the
